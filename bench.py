@@ -145,9 +145,13 @@ def load_curated_priors(repo_root: str, sf: float) -> dict[str, float]:
     deterministic kept-set choice may read: merging BENCH_FULL.json
     (which every sweep overwrites) back in would let one sweep's
     readings re-order the next sweep's kept set, recreating exactly
-    the churn VERDICT r16 #6 asked to remove."""
+    the churn VERDICT r16 #6 asked to remove.
+
+    Falling back to no priors announces itself with one stderr line
+    (never stdout: fd 1 carries only the result JSON)."""
+    path = os.path.join(repo_root, "BENCH_PRIORS.json")
     try:
-        with open(os.path.join(repo_root, "BENCH_PRIORS.json")) as f:
+        with open(path) as f:
             data = json.load(f)
         if data.get("sf") == sf:
             return {
@@ -155,8 +159,11 @@ def load_curated_priors(repo_root: str, sf: float) -> dict[str, float]:
                 for k, v in data.get("queries", {}).items()
                 if isinstance(v, (int, float))
             }
-    except Exception:
-        pass
+        reason = f"recorded at sf={data.get('sf')}, this run is sf={sf}"
+    except Exception as exc:
+        reason = f"unreadable: {exc}"
+    print(f"[bench] {path} ignored ({reason}); kept set built without priors",
+          file=sys.stderr)
     return {}
 
 

@@ -32,12 +32,7 @@ from machine_learning_algorithm_sparkml__spark.operators.rangejoin import (
     bucketized_range_join,
 )
 from machine_learning_algorithm_sparkml__spark.operators.sessions import sessionize
-from machine_learning_algorithm_sparkml__spark.operators.simsearch import (
-    brute_force_topk,
-    embedding_near_dup_pairs,
-    hyperplane_lsh_topk,
-    ivf_topk,
-)
+from machine_learning_algorithm_sparkml__spark.operators.simsearch import brute_force_topk
 from machine_learning_algorithm_sparkml__spark.operators.skew import (
     salted_aggregate_count,
     salted_join,
@@ -69,9 +64,6 @@ __all__ = [
     "bucketized_range_join",
     "sessionize",
     "brute_force_topk",
-    "hyperplane_lsh_topk",
-    "ivf_topk",
-    "embedding_near_dup_pairs",
     "salted_join",
     "salted_aggregate_count",
 ]

@@ -2,18 +2,17 @@
 (additive, SURVEY.md §7.4; method of Abbas et al. 2023, "SemDeDup:
 Data-efficient learning at web-scale through semantic deduplication").
 
-Shape: (1) KMeans clusters the embedding space — at 100 TB the fit
-runs on a bounded seeded sample while assignment is a single broadcast
-pass over the corpus (cluster centers are k×dim, kilobytes); (2) the
-candidate near-duplicate search is confined WITHIN clusters, so the
-quadratic pair term is bounded by the largest cluster, not the corpus
-— the same blast-radius control as the LSH buckets in
-``operators/simsearch.py``, but driven by learned structure instead of
-random planes; (3) among mutually-similar docs the min-id
-representative is kept (deterministic, engine-independent).
-
-MLlib KMeans with a fixed seed is deterministic for a fixed input
-partitioning, so the workload key pins a repartition before fit.
+Shape: (1) centroids partition the embedding space — a bounded
+md5-ranked sample of the corpus, so the fit reads k rows to the
+driver at any scale, and assignment is a single broadcast pass over
+the corpus (centers are k×dim, kilobytes); (2) the candidate
+near-duplicate search is confined WITHIN clusters, so the quadratic
+pair term is bounded by the largest cluster, not the corpus — the
+same blast-radius control as the LSH buckets in
+``operators/simsearch.py``; (3) among mutually-similar docs the
+min-id representative is kept (deterministic, engine-independent).
+Every stage runs in exact integer space or the shared rounded
+cosine, so DuckDB replays each keep/drop verdict.
 """
 
 from __future__ import annotations
@@ -32,128 +31,9 @@ def choose_k(n: int, *, target_cluster_rows: int = 2048, k_max: int = 65_536) ->
     Capped at ``k_max`` — centers stay a broadcastable k×dim matrix
     (65 536 × 64 doubles ≈ 34 MB); beyond the cap, route
     within-cluster candidate generation through the bucketed
-    ``embedding_near_dup_pairs`` instead of raising k further."""
+    ``simsearch.portable_near_dup_pairs`` instead of raising k
+    further."""
     return max(16, min(-(-n // target_cluster_rows), k_max))
-
-
-def cluster_embeddings(
-    df: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int | None = None,
-    seed: int = 754,
-    fit_sample_rows: int = 100_000,
-    target_cluster_rows: int = 2048,
-) -> DataFrame:
-    """Assign a ``cluster`` id to every row. ``k=None`` (the default)
-    derives k from the corpus size via :func:`choose_k` so cluster —
-    and therefore pairwise-candidate — size stays bounded at any
-    scale. The KMeans fit is bounded: when the input exceeds
-    ``fit_sample_rows`` the model fits on a seeded sample (centers
-    only need to be representative; assignment is exact for whichever
-    centers come out). Assignment itself is one projection —
-    model.transform broadcasts the k×dim centers."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    with_vec = df.withColumn("_v", array_to_vector(F.col(vec_col)))
-    n = with_vec.count()
-    if k is None:
-        k = choose_k(n, target_cluster_rows=target_cluster_rows)
-        # the sample must keep ≥ a handful of rows per center or the
-        # fit degenerates to singleton clusters of sample points
-        fit_sample_rows = max(fit_sample_rows, 16 * k)
-    fit_input = with_vec
-    if n > fit_sample_rows:
-        fit_input = with_vec.sample(fraction=fit_sample_rows / n, seed=seed)
-    # Seeded random init + bounded iterations: kmeans|| init costs ~5
-    # extra passes over the fit set for marginally better centers the
-    # dedup step doesn't need (any stable partition of the space works
-    # — duplicates are IDENTICAL vectors, always co-assigned). The fit
-    # set is driver-bounded, so coalesce it away from the corpus's
-    # partitioning to keep per-iteration task overhead flat.
-    model = KMeans(
-        k=k,
-        seed=seed,
-        featuresCol="_v",
-        predictionCol="cluster",
-        initMode="random",
-        maxIter=10,
-        tol=1e-3,
-    ).fit(fit_input.coalesce(8))
-    return model.transform(with_vec).drop("_v")
-
-
-def semantic_dedup(
-    df: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int | None = None,
-    tau: float = 0.97,
-    seed: int = 754,
-) -> DataFrame:
-    """SemDeDup keep/drop verdicts: (id, cluster, is_kept).
-
-    A row is dropped iff some SAME-CLUSTER row with a smaller id has
-    cosine ≥ tau — so every duplicate group keeps exactly its min-id
-    member (cross-cluster near-dups are accepted misses, exactly as in
-    the paper; recall is a property of k and is tested with planted
-    duplicates). ``k=None`` scales the cluster count with the corpus
-    (:func:`choose_k`) so the within-cluster pair term stays bounded
-    at any input size."""
-    # spread first (no-op at cluster scale): the corpus otherwise scans
-    # as one task, so the assignment projection + per-row normalization
-    # run single-core AND the checkpointed frame's single partition
-    # serializes the within-cluster pair stage (the broadcast join's
-    # probe side inherits it) — r16, see operators/spread.py
-    df = spread_rows(df, id_col)
-    assigned = cluster_embeddings(df, id_col=id_col, vec_col=vec_col, k=k, seed=seed)
-    # Pre-normalize ONCE per vector so the pairwise predicate is a
-    # single dot product instead of dot + two norms — the pairwise
-    # term dominates (cluster_size² pairs × vector length of
-    # interpreted higher-order-function evaluation), so cutting it
-    # 3× is the lever. Zero vectors normalize to zeros (cos := 0).
-    norm = F.sqrt(
-        F.aggregate(
-            F.transform(F.col(vec_col), lambda x: x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x * x,
-        )
-    )
-    unit = F.when(norm == 0.0, F.transform(F.col(vec_col), lambda x: F.lit(0.0))).otherwise(
-        F.transform(F.col(vec_col), lambda x: x.cast("double") / norm)
-    )
-    # both legs of the within-cluster self-join read the assignment;
-    # checkpoint so KMeans transform + normalization run once
-    assigned = (
-        assigned.select(id_col, "cluster", unit.alias("_unit"))
-        .localCheckpoint(eager=True)
-    )
-    left = assigned.select(F.col(id_col).alias("i"), "cluster", F.col("_unit").alias("vi"))
-    right = assigned.select(F.col(id_col).alias("j"), "cluster", F.col("_unit").alias("vj"))
-    pair_dot = F.aggregate(
-        F.zip_with(F.col("vi"), F.col("vj"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    dup_ids = (
-        left.join(right, "cluster")
-        .filter(F.col("j") < F.col("i"))
-        .filter(pair_dot >= tau)
-        .select(F.col("i").alias(id_col))
-        .distinct()
-    )
-    return (
-        assigned.select(id_col, "cluster")
-        .join(dup_ids.withColumn("_dup", F.lit(True)), id_col, "left")
-        .select(
-            id_col,
-            "cluster",
-            F.coalesce(~F.col("_dup"), F.lit(True)).alias("is_kept"),
-        )
-    )
 
 
 def semantic_dedup_portable(
@@ -168,7 +48,7 @@ def semantic_dedup_portable(
     """SemDeDup whose ENTIRE pipeline an external engine replays
     value-exactly (VERDICT r11 "Next round" #2) — the portable-centroid
     recipe proven on ``simsearch_ivf_portable`` applied to the
-    clustering core that kept :func:`semantic_dedup` rows-only:
+    clustering core (a float KMeans fit is not replayable):
 
     - centroids are a deterministic md5-ranked SAMPLE of the corpus
       (``operators/simsearch._portable_centroids``) instead of a
@@ -180,15 +60,15 @@ def semantic_dedup_portable(
       cosine (ROUND 6, the ``simsearch_topk`` pattern) against tau, so
       the keep/drop verdict of every row is engine-reproducible.
 
-    Semantics match :func:`semantic_dedup`: a row is dropped iff some
-    same-cluster row with a smaller id has rounded cosine >= tau; each
-    duplicate group keeps its min-id member. The 100 TB shape is
-    IDENTICAL to the MLlib variant — bounded k x dim centroid collect,
+    A row is dropped iff some same-cluster row with a smaller id has
+    rounded cosine >= tau; each duplicate group keeps its min-id
+    member (cross-cluster near-dups are accepted misses, exactly as in
+    the paper). The 100 TB shape: bounded k x dim centroid collect,
     one broadcast assignment pass, pair search confined within
-    clusters — only the fit stage changed (sampled centroids trade
-    within-cluster tightness for replayability; duplicates are
-    IDENTICAL vectors, always co-assigned under ANY deterministic
-    center set, so dedup recall is unaffected).
+    clusters. Sampled centroids trade within-cluster tightness for
+    replayability; duplicates are IDENTICAL vectors, always
+    co-assigned under ANY deterministic center set, so dedup recall
+    is unaffected.
 
     Output: (id_col, cluster, is_kept) with ``cluster`` the centroid
     rank (int).
@@ -201,9 +81,12 @@ def semantic_dedup_portable(
 
     cz = _portable_centroids(df, id_col, vec_col, k, tag)
     assign_udf = _portable_cells_udf(cz, 1)
-    # spread before the assignment UDF (same rationale as
-    # semantic_dedup; centroids are md5-ranked — value-based, so the
-    # exchange cannot move the oracle hash)
+    # spread before the assignment UDF (no-op at cluster scale): the
+    # corpus otherwise scans as one task, so the assignment projection
+    # runs single-core AND the checkpointed frame's single partition
+    # serializes the within-cluster pair stage — r16, see
+    # operators/spread.py. Centroids are md5-ranked — value-based, so
+    # the exchange cannot move the oracle hash
     df = spread_rows(df, id_col)
     assigned = (
         df.select(

@@ -74,7 +74,19 @@ def _dedup_group(
     # (phase, doc_id) order, so after the sort only the FIRST row can
     # become the keeper (iff no keeper is stored yet) and the
     # monotonicity assert only ever fires on the minimum.
-    frames = [f for f in batches]
+    frames = [f for f in batches if len(f)]
+    if not frames:
+        # an empty group (a timeout call carries no rows): nothing to
+        # decide, state unchanged
+        yield pd.DataFrame(
+            {
+                "doc_id": pd.Series(dtype="int64"),
+                "fp": pd.Series(dtype="int64"),
+                "phase": pd.Series(dtype="int32"),
+                "is_kept": pd.Series(dtype="bool"),
+            }
+        )
+        return
     pdf = frames[0] if len(frames) == 1 else pd.concat(frames)
     if len(pdf) > 1:
         pdf = pdf.sort_values(["phase", "doc_id"])

@@ -187,8 +187,10 @@ def q_agg_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     #   2. one partial-aggregated pass counting rows strictly below /
     #      inside the bracket;
     #   3. TakeOrderedAndProject of the two order statistics from the
-    #      ~0.2*N bracket rows (per-partition top-k heaps — parallel,
-    #      never a full-value merge).
+    #      ~0.2*N bracket rows: per-partition top-k heaps run in
+    #      parallel, but the final task still merges up to
+    #      k2 - n_below + 1 (about 0.1*N) values — a bounded merge,
+    #      not percentile's merge of every value.
     # The bracket-guarantee check falls back to the old single-merge
     # percentile if the sketch ever failed it (it cannot, by the rank
     # bound; belt-and-braces so a pathological input stays CORRECT,

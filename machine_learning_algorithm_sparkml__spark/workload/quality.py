@@ -308,23 +308,14 @@ def q_text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup over the embedding set with planted duplicates (same
-    planting scheme as ``embedding_neardup``: every vec_id divisible
-    by 100 re-inserted at id+10_000_000, so each planted copy MUST be
-    dropped in favor of its min-id original — same vector ⇒ same
-    cluster ⇒ sim 1.0). Rows-only key (KMeans isn't SQL-expressible);
-    ``planted_dropped_ok`` carries the signal: TRUE iff every planted
-    copy was dropped AND every planted copy's original kept."""
-    from machine_learning_algorithm_sparkml__spark.operators.semdedup import semantic_dedup
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    planted = emb.filter(F.col("vec_id") % 100 == 0).withColumn(
-        "vec_id", F.col("vec_id") + F.lit(10_000_000)
-    )
-    corpus = emb.unionByName(planted)
-    verdicts = semantic_dedup(
-        corpus, id_col="vec_id", vec_col="embedding", tau=0.97
-    ).localCheckpoint(eager=True)  # invariant agg + output both read it
+    """Rows-only view of ``semantic_dedup_portable`` (same operator,
+    parameters and planted-duplicate corpus) plus
+    ``planted_dropped_ok``: TRUE iff every planted copy was dropped
+    AND every planted copy's original kept (same vector ⇒ same
+    cluster ⇒ sim 1.0, so each copy loses to its min-id original)."""
+    verdicts = q_semantic_dedup_portable(spark, sf_dir).localCheckpoint(
+        eager=True
+    )  # invariant agg + output both read it
     # Both conjuncts in one pass: planted rows must ALL be dropped, and
     # their originals (vec_id = planted - 10M) must ALL be kept. The
     # sums are coalesced so an (impossible-today, but schema-safe) empty
@@ -333,10 +324,10 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # PRECONDITION (ADVICE r5): the originals-kept conjunct assumes the
     # testdata embeddings have NO natural near-dups at tau=0.97 — an
     # original could legitimately be dropped as a near-dup of a
-    # LOWER-id natural neighbor, and cluster boundaries shift with the
-    # corpus-size-derived k. Holds for the synthetic uniform-random
-    # embeddings (top-5 cosine ~0.32 << 0.97); revisit the invariant,
-    # not the operator, if testdata ever gains correlated vectors.
+    # LOWER-id natural neighbor in its cluster. Holds for the synthetic
+    # uniform-random embeddings (top-5 cosine ~0.32 << 0.97); revisit
+    # the invariant, not the operator, if testdata ever gains
+    # correlated vectors.
     kept = F.col("is_kept").cast("int")
     is_planted = F.col("vec_id") >= 10_000_000
     is_original = (F.col("vec_id") % 100 == 0) & ~is_planted
@@ -350,16 +341,17 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_semantic_dedup_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ORACLE-BACKED SemDeDup (VERDICT r11 #2): same planted-duplicate
-    corpus as ``semantic_dedup``, but the clustering core is the
-    portable-centroid recipe (md5-ranked sampled centroids, exact
-    int64 squared-L2 assignment, rounded-cosine pair predicate —
+    """ORACLE-BACKED SemDeDup (VERDICT r11 #2) over the embedding set
+    with planted duplicates (every vec_id divisible by 100 re-inserted
+    at id+10_000_000, the ``embedding_neardup`` scheme). The
+    clustering core is the portable-centroid recipe (md5-ranked
+    sampled centroids, exact int64 squared-L2 assignment,
+    rounded-cosine pair predicate —
     operators/semdedup.semantic_dedup_portable), so DuckDB replays the
     WHOLE program value-exactly: centroid choice, every cluster
-    assignment, and each keep/drop verdict. The MLlib-KMeans sibling
-    stays as the rows-only invariant key; this upgrades the family's
-    evidence class to hash-exact — the same playbook that converted
-    the LSH/IVF ANN keys in r10."""
+    assignment, and each keep/drop verdict. The rows-only
+    ``semantic_dedup`` is this key plus its ``planted_dropped_ok``
+    verdict."""
     from machine_learning_algorithm_sparkml__spark.operators.semdedup import (
         semantic_dedup_portable,
     )
@@ -829,9 +821,9 @@ ORACLE = {
                     '[.,;:!?]', '', 'g'), '\\s+', ' ', 'g'))) AS INTEGER) AS norm_len
         FROM documents
     """,
-    # semantic_dedup: KMeans clustering is not SQL-expressible — rows-only
-    # with the planted_dropped_ok invariant column. Its portable sibling
-    # below replays the full program (operators/semdedup.py:
+    # semantic_dedup: rows-only — semantic_dedup_portable plus the
+    # planted_dropped_ok invariant column. The portable key below
+    # replays the full program (operators/semdedup.py:
     # semantic_dedup_portable): md5-ranked sampled centroids, exact
     # int64 squared-L2 assignment over floor-quantized vectors,
     # rounded-cosine >= tau within-cluster verdicts, min-id keep.

@@ -257,7 +257,7 @@ def test_deterministic_kept_keys_new_keys_first():
     assert "key_299" in bench.deterministic_kept_keys(keys, prior)
 
 
-def test_curated_priors_ignore_bench_full(tmp_path):
+def test_curated_priors_ignore_bench_full(tmp_path, capsys):
     # the kept-set prior source must be BENCH_PRIORS.json alone: a
     # sweep's own BENCH_FULL.json must not re-order the next sweep
     import json
@@ -271,3 +271,19 @@ def test_curated_priors_ignore_bench_full(tmp_path):
     assert bench.load_curated_priors(str(tmp_path), 0.1) == {"a": 2.0}
     # merged floor (spike detection) still folds BENCH_FULL minima
     assert bench.load_priors(str(tmp_path), 0.1) == {"a": 0.1, "b": 0.2}
+    assert capsys.readouterr().err == ""
+
+    # falling back to no priors warns on stderr, never on stdout (fd 1
+    # carries only the result JSON): an sf mismatch...
+    assert bench.load_curated_priors(str(tmp_path), 0.01) == {}
+    out = capsys.readouterr()
+    assert out.out == ""
+    assert "BENCH_PRIORS.json ignored" in out.err and "sf=0.01" in out.err
+    assert out.err.count("\n") == 1
+    # ...and an unreadable file
+    (tmp_path / "BENCH_PRIORS.json").write_text("{not json")
+    assert bench.load_curated_priors(str(tmp_path), 0.1) == {}
+    out = capsys.readouterr()
+    assert out.out == ""
+    assert "BENCH_PRIORS.json ignored (unreadable" in out.err
+    assert out.err.count("\n") == 1

@@ -329,28 +329,31 @@ def test_round7_sql_wave2_plan_shapes(spark, sf_dir):
 
 
 def test_pq_topk_no_global_cross_product_shuffle(spark, sf_dir):
-    """pq_topk must score inside each corpus partition and emit only
-    local top-S candidates: the plan may not contain the
-    corpus×queries cross join the r6 version ranked with a global
-    window (VERDICT r6 "What's wrong" #2). The surviving Window runs
-    over the bounded local-shortlist union only."""
-    from machine_learning_algorithm_sparkml__spark.operators.simsearch import pq_topk
+    """The PQ and IVF+PQ operators must score inside each corpus
+    partition and emit only local top-S candidates: the plan may not
+    contain the corpus×queries cross join the r6 version ranked with a
+    global window (VERDICT r6 "What's wrong" #2). The surviving Window
+    runs over the bounded local-shortlist union only."""
+    from machine_learning_algorithm_sparkml__spark.operators.simsearch import (
+        portable_ivfpq_topk,
+        portable_pq_topk,
+    )
     from machine_learning_algorithm_sparkml__spark.plans import formatted_plan
 
     spark.catalog.clearCache()
     emb = load_table(spark, sf_dir, "embeddings")
-    df = pq_topk(emb, emb.filter(F.col("vec_id") < 10), k=5)
-    plan = formatted_plan(df)
-    assert "CartesianProduct" not in plan, plan
-    assert "NestedLoop" not in plan, plan
-    assert "MapInPandas" in plan, plan
+    for fn in (portable_pq_topk, portable_ivfpq_topk):
+        plan = formatted_plan(fn(emb, emb.filter(F.col("vec_id") < 10), k=5))
+        assert "CartesianProduct" not in plan, f"{fn.__name__}:\n{plan}"
+        assert "NestedLoop" not in plan, f"{fn.__name__}:\n{plan}"
+        assert "MapInPandas" in plan, f"{fn.__name__}:\n{plan}"
 
 
 def test_portable_lsh_plan_is_bucketed_broadcast_not_cross_product(spark, sf_dir):
-    """portable_lsh_topk must keep the float-LSH plan shape: the
-    candidate join is a broadcast hash join on (table, bucket) and the
-    corpus is never cross-joined against the query set — portability
-    (integer planes) may not cost the bucketed physical plan."""
+    """portable_lsh_topk's candidate join is a broadcast hash join on
+    (table, bucket) and the corpus is never cross-joined against the
+    query set — portability (integer planes) may not cost the bucketed
+    physical plan."""
     from machine_learning_algorithm_sparkml__spark.operators.simsearch import (
         portable_lsh_topk,
     )

@@ -258,18 +258,21 @@ def test_quantize_is_shuffle_free(spark, sf_dir):
 
 # --- semantic dedup ------------------------------------------------------------
 
-def test_semantic_dedup_drops_planted_copies(spark, sf_dir):
-    from machine_learning_algorithm_sparkml__spark.operators.semdedup import semantic_dedup
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    planted = emb.filter(F.col("vec_id") % 100 == 0).withColumn(
-        "vec_id", F.col("vec_id") + F.lit(10_000_000)
+def test_semantic_dedup_drops_planted_copies(spark, sf_dir, monkeypatch):
+    """The rows-only ``semantic_dedup`` key (the portable operator plus
+    its verdict column): every planted copy is dropped in favor of its
+    original, nothing else is dropped, and ``planted_dropped_ok`` reads
+    TRUE on every row."""
+    from machine_learning_algorithm_sparkml__spark.workload.quality import (
+        q_semantic_dedup,
     )
-    out = semantic_dedup(emb.unionByName(planted))
-    rows = {r["vec_id"]: r for r in out.collect()}
-    n_planted = planted.count()
+
+    monkeypatch.setenv("SPARK_GRAFT_SELF_VERIFY", "1")
+    rows = {r["vec_id"]: r for r in q_semantic_dedup(spark, sf_dir).collect()}
+    n_planted = sum(1 for vid in rows if vid >= 10_000_000)
     assert n_planted > 0
     for vid, r in rows.items():
+        assert r["planted_dropped_ok"] is True, vid
         if vid >= 10_000_000:
             # identical vector, larger id -> must be dropped...
             assert not r["is_kept"], vid
@@ -281,15 +284,19 @@ def test_semantic_dedup_drops_planted_copies(spark, sf_dir):
 
 
 def test_semantic_dedup_cluster_assignment_consistent(spark, sf_dir):
-    """Identical vectors must land in the same cluster (assignment is
-    a pure argmin over broadcast centers)."""
-    from machine_learning_algorithm_sparkml__spark.operators.semdedup import semantic_dedup
+    """Identical vectors must land in the same cluster at any cluster
+    count (assignment is a pure exact-int64 argmin over broadcast
+    centers), checked with a distributed join rather than on the
+    driver."""
+    from machine_learning_algorithm_sparkml__spark.operators.semdedup import (
+        semantic_dedup_portable,
+    )
 
     emb = load_table(spark, sf_dir, "embeddings")
     planted = emb.filter(F.col("vec_id") % 100 == 0).withColumn(
         "vec_id", F.col("vec_id") + F.lit(10_000_000)
     )
-    out = semantic_dedup(emb.unionByName(planted))
+    out = semantic_dedup_portable(emb.unionByName(planted), k=8)
     pairs = (
         out.filter(F.col("vec_id") >= 10_000_000)
         .select(
@@ -298,6 +305,7 @@ def test_semantic_dedup_cluster_assignment_consistent(spark, sf_dir):
         )
         .join(out, "vec_id")
     )
+    assert pairs.count() == planted.count()
     mismatch = pairs.filter(F.col("cluster") != F.col("cluster_copy")).count()
     assert mismatch == 0
 
@@ -339,8 +347,7 @@ def test_quantize_arrow_crossing_equals_jvm_path(spark, sf_dir):
 
 
 def test_semantic_dedup_portable_drops_planted_copies(spark, sf_dir):
-    """The portable-centroid variant must reproduce the MLlib
-    sibling's dedup semantics exactly on the planted corpus: every
+    """The portable-centroid operator on the planted corpus: every
     planted clone dropped, every original kept, nothing else dropped
     (uniform-random vectors have no natural pairs at tau=0.97), and
     identical vectors co-assigned. Value-level parity vs DuckDB is

@@ -116,3 +116,33 @@ def test_doc_counts_match_registry():
     assert (int(m.group(1)), int(m.group(2)), int(m.group(3))) == (
         len(qs), len(os_), len(qs) - len(os_),
     ), f"PARITY says {m.groups()}, registry has {len(qs)}/{len(os_)}/{len(qs)-len(os_)}"
+
+
+def test_self_verified_keys_are_registered():
+    """bench.py records SELF_VERIFIED_KEYS as the keys whose timings
+    exclude an in-query truth pass; an entry naming no registered key
+    (say, after a re-point or a merge) would misreport silently."""
+    from machine_learning_algorithm_sparkml__spark.workload.llm import SELF_VERIFIED_KEYS
+
+    qs = workload.all_queries()
+    missing = [k for k in SELF_VERIFIED_KEYS if k not in qs]
+    assert not missing, f"SELF_VERIFIED_KEYS not in registry: {missing}"
+    assert len(set(SELF_VERIFIED_KEYS)) == len(SELF_VERIFIED_KEYS)
+
+
+def test_rows_only_ann_keys_have_oracle_checked_siblings():
+    """Each rows-only ANN/SemDeDup key runs its ``*_portable``
+    sibling's builder plus a verdict column, so the sibling must stay
+    registered AND oracle-checked: that oracle is the value-level
+    evidence behind the rows-only key."""
+    qs, os_ = workload.all_queries(), workload.all_oracles()
+    for key in (
+        "simsearch_lsh",
+        "simsearch_ivf",
+        "simsearch_pq",
+        "simsearch_ivfpq",
+        "embedding_neardup",
+        "semantic_dedup",
+    ):
+        assert key in qs and key not in os_, key
+        assert f"{key}_portable" in qs and f"{key}_portable" in os_, key

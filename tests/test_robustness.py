@@ -16,7 +16,7 @@ from machine_learning_algorithm_sparkml__spark.operators.dedup import (
 )
 from machine_learning_algorithm_sparkml__spark.operators.simsearch import (
     brute_force_topk,
-    embedding_near_dup_pairs,
+    portable_near_dup_pairs,
 )
 from machine_learning_algorithm_sparkml__spark.sources import load_table
 
@@ -40,17 +40,17 @@ def test_simsearch_with_empty_queries(spark, sf_dir):
 
 def test_neardup_single_vector(spark):
     df = spark.createDataFrame([(1, [1.0] * 8)], "vec_id long, embedding array<float>")
-    assert embedding_near_dup_pairs(df, num_planes=4, num_tables=2).count() == 0
+    assert portable_near_dup_pairs(df, num_planes=4, num_tables=2).count() == 0
 
 
 def test_lsh_and_ivf_empty_corpus(spark):
     from machine_learning_algorithm_sparkml__spark.operators.simsearch import (
-        hyperplane_lsh_topk,
-        ivf_topk,
+        portable_ivf_topk,
+        portable_lsh_topk,
     )
 
     empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
-    for fn in (hyperplane_lsh_topk, ivf_topk):
+    for fn in (portable_lsh_topk, portable_ivf_topk):
         out = fn(empty, empty, k=3)
         assert out.count() == 0
         assert set(out.columns) == {"query_id", "neighbor_id", "rank", "sim"}
@@ -233,13 +233,15 @@ def test_session2_ops_on_degenerate_frames(spark):
     """Empty / degenerate inputs for the session-2 operators: fuzzy
     decontamination with an empty benchmark keeps everything (and an
     empty corpus yields nothing), incremental dedup with an empty
-    corpus keeps the whole batch, pq_topk returns a schema-stable
-    empty frame on an empty corpus."""
+    corpus keeps the whole batch, portable_pq_topk returns a
+    schema-stable empty frame on an empty corpus."""
     from machine_learning_algorithm_sparkml__spark.operators.dedup import (
         decontaminate_by_minhash,
         incremental_exact_dedup,
     )
-    from machine_learning_algorithm_sparkml__spark.operators.simsearch import pq_topk
+    from machine_learning_algorithm_sparkml__spark.operators.simsearch import (
+        portable_pq_topk,
+    )
 
     empty = _empty_docs(spark)
     docs = spark.createDataFrame(
@@ -257,7 +259,7 @@ def test_session2_ops_on_degenerate_frames(spark):
     assert out.count() == 0 and set(out.columns) == {"text", "doc_id", "n_copies"}
 
     empty_emb = spark.createDataFrame([], "vec_id long, embedding array<double>")
-    res = pq_topk(empty_emb, empty_emb, k=3)
+    res = portable_pq_topk(empty_emb, empty_emb, k=3)
     assert res.count() == 0
     assert res.columns == ["query_id", "neighbor_id", "rank", "sim"]
 

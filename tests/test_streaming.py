@@ -843,6 +843,24 @@ def test_streaming_corpus_dedup_state_survives_restart(spark, sf_dir):
     out.unpersist()
 
 
+class _StubGroupState:
+    """The slice of pyspark's GroupState that _dedup_group touches."""
+
+    def __init__(self, value=None):
+        self._v = value
+
+    @property
+    def exists(self):
+        return self._v is not None
+
+    @property
+    def get(self):
+        return self._v
+
+    def update(self, v):
+        self._v = v
+
+
 def test_corpus_dedup_group_handler_closed_form():
     """r17 fast path of streaming/corpus_dedup._dedup_group: keeper
     election and the non-monotonic raise must behave exactly as the
@@ -855,28 +873,13 @@ def test_corpus_dedup_group_handler_closed_form():
         _dedup_group,
     )
 
-    class _State:
-        def __init__(self, value=None):
-            self._v = value
-
-        @property
-        def exists(self):
-            return self._v is not None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
     def run(rows, state):
         pdf = pd.DataFrame(rows, columns=["doc_id", "phase"])
         (out,) = list(_dedup_group((123,), iter([pdf]), state))
         return list(zip(out["doc_id"], out["kept"] if "kept" in out else out["is_kept"]))
 
     # fresh group: min (phase, doc_id) keeps, rest drop — input unsorted
-    st = _State()
+    st = _StubGroupState()
     got = run([(7, 1), (3, 1), (9, 2)], st)
     assert got == [(3, True), (7, False), (9, False)]
     assert st.get == (1, 3)
@@ -889,3 +892,25 @@ def test_corpus_dedup_group_handler_closed_form():
     # arrival below the stored keeper must raise, not re-elect
     with _pytest.raises(ValueError, match="non-monotonic"):
         run([(1, 1)], st)
+
+
+def test_corpus_dedup_group_handler_empty_group():
+    """An empty group (no batches, or only empty frames — what a
+    timeout call delivers) yields one empty frame with the output
+    columns and leaves the stored keeper untouched."""
+    import pandas as pd
+
+    from machine_learning_algorithm_sparkml__spark.streaming.corpus_dedup import (
+        _dedup_group,
+    )
+
+    empty = pd.DataFrame({"doc_id": pd.Series(dtype="int64"), "phase": pd.Series(dtype="int32")})
+    for batches in ([], [empty], [empty, empty]):
+        st = _StubGroupState((1, 3))
+        (out,) = list(_dedup_group((123,), iter(batches), st))
+        assert out.empty
+        assert list(out.columns) == ["doc_id", "fp", "phase", "is_kept"]
+        assert st.get == (1, 3)
+    fresh = _StubGroupState()
+    (out,) = list(_dedup_group((123,), iter([]), fresh))
+    assert out.empty and not fresh.exists
