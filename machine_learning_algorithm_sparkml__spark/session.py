@@ -22,10 +22,12 @@ DEFAULT_APP_NAME = "machine_learning_algorithm_sparkml__spark"
 
 
 def _cpus() -> int:
+    """``SPARK_GRAFT_CPUS``, else the cores this process may run on."""
+    default = len(os.sched_getaffinity(0))
     try:
-        return max(1, int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+        return max(1, int(os.environ.get("SPARK_GRAFT_CPUS", default)))
     except ValueError:
-        return 32
+        return default
 
 
 def get_session(app_name: str = DEFAULT_APP_NAME, *, master: str | None = None) -> SparkSession:

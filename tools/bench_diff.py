@@ -34,8 +34,9 @@ def load(ref: str) -> dict:
         with open(ref) as f:
             d = json.load(f)
     # the driver's BENCH_r{N}.json wraps the bench JSON line under
-    # "parsed" (its "queries" omits sub-noise keys; the diff then
-    # covers the driver-visible keys only)
+    # "parsed" (older lines carry a partial "queries"; the diff then
+    # covers those keys only — current lines carry totals only, so
+    # diff BENCH_FULL.json revisions instead)
     if "queries" not in d and isinstance(d.get("parsed"), dict):
         d = d["parsed"]
     return d

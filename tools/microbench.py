@@ -1,8 +1,9 @@
 """Micro-bench: time a subset of query keys at a given SF dir.
 
 Usage: python tools/microbench.py [key ...]   (env: SPARK_GRAFT_SF_DIR)
-Prints one JSON line {key: sec}. Same noop-sink forcing and cache
-hygiene as bench.py, minus the full sweep — the iterate-fast loop for
+Prints one JSON line {key: sec}: each key timed by bench.time_key (the
+lower median of bench.RUNS noop-sink runs, cache cleared after each),
+minus the full sweep and BENCH_FULL.json — the iterate-fast loop for
 optimizing a single operator.
 """
 
@@ -11,14 +12,14 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from bench import _force  # same plan-forcing recipe as the official bench
+    from bench import time_key  # the official bench's timing protocol
     from machine_learning_algorithm_sparkml__spark import get_session
     from machine_learning_algorithm_sparkml__spark.sources import load_table
     import __spark_entry__ as entrymod
@@ -28,12 +29,7 @@ def main() -> None:
     keys = sys.argv[1:] or ["dedup_clusters"]
     load_table(spark, sf_dir, "lineitem").count()  # warm-up, not recorded
 
-    timings = {}
-    for name in keys:
-        t0 = time.perf_counter()
-        _force(qs[name](spark, sf_dir))
-        timings[name] = round(time.perf_counter() - t0, 3)
-        spark.catalog.clearCache()
+    timings = {k: time_key(spark, k, partial(qs[k], spark, sf_dir), {}) for k in keys}
     print(json.dumps(timings))
 
 

@@ -30,8 +30,8 @@ Families (pass any subset as argv; default = all):
 
 Usage:
     python tools/scale_witness.py [dedup] [relational] [ann] [maintenance] [maintenance2]
-Timing protocol: bench.py's (lower median of 3, machine idle —
-the foreign-workload stamp is reused; self-verify truth passes off).
+Timing protocol: bench.time_key (lower median of bench.RUNS runs;
+self-verify truth passes off). Run it on an otherwise idle machine.
 """
 
 from __future__ import annotations
@@ -39,7 +39,7 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -382,27 +382,12 @@ def build_sf1_events(spark, out_dir: str) -> None:
     )
 
 
-def time_key(spark, qs, key: str, sf_dir: str) -> float:
-    runs = []
-    for _ in range(3):
-        t0 = time.perf_counter()
-        qs[key](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        runs.append(time.perf_counter() - t0)
-        spark.catalog.clearCache()
-    return sorted(runs)[1]
-
-
 def main() -> int:
     import tempfile
 
     import bench
 
     families = [a for a in sys.argv[1:] if a in FAMILY_KEYS] or list(FAMILY_KEYS)
-
-    offenders = bench.foreign_workloads()
-    if offenders:
-        print(f"machine not idle, refusing to time: {offenders}", file=sys.stderr)
-        return 2
 
     # measure the operators, not the truth passes (same rule as bench)
     os.environ["SPARK_GRAFT_SELF_VERIFY"] = "0"
@@ -443,8 +428,8 @@ def main() -> int:
     load_table(spark, SF01, "lineitem").count()
     for fam in families:
         for key in FAMILY_KEYS[fam]:
-            t01 = time_key(spark, qs, key, SF01)
-            t1 = time_key(spark, qs, key, sf1_dir)
+            t01 = bench.time_key(spark, key, partial(qs[key], spark, SF01), {})
+            t1 = bench.time_key(spark, key, partial(qs[key], spark, sf1_dir), {})
             print(
                 json.dumps(
                     {
