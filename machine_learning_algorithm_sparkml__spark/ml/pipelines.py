@@ -8,14 +8,15 @@ Fixture mapping (FIXTURES.md "Mapping onto the driver's testdata"):
   features (o_totalprice, c_acctbal) predicting the winner's segment.
 
 Pipelines:
-- ``mla_pipeline``  — ``MarchineLearningAlgorithm.txt``: multi-col
-  StringIndexer -> VectorAssembler -> RandomForest -> 3-fold CV over
-  maxDepth {3,4} x impurity {entropy,gini}.
+- ``mla_pipeline``  — ``MarchineLearningAlgorithm.txt``: one multi-col
+  StringIndexer (label and features) -> VectorAssembler -> RandomForest
+  -> 3-fold CV over maxDepth {3,4} x impurity {entropy,gini}; the
+  indexer and assembler are fitted once per fold, not once per map.
 - ``use_pipeline``  — ``RandomeForestAnalysisOnUSElectionPrediction
   .txt``: label indexer + numeric features, grid maxDepth {3,5}.
 - ``arc_pipeline``  — ``A related code.txt``: undersample-balance ->
-  explicit indexer fit/transform (M3) -> OneHotEncoder -> assembler
-  -> RF -> CV.
+  explicit fit/transform (M3) of one multi-col indexer (label and
+  features) -> OneHotEncoder -> assembler -> RF -> CV.
 
 All seeds are the reference's own: split 754, RF 1234.
 """
@@ -98,16 +99,17 @@ def election_like_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def mla_pipeline(df: DataFrame) -> PipelineResult:
-    """MLA end-to-end: indexers -> assembler -> RF -> CV(3) over
+    """MLA end-to-end: indexer -> assembler -> RF -> CV(3) over
     {3,4}x{entropy,gini} -> accuracy on the seeded 20% split
-    (``MarchineLearningAlgorithm.txt:62-270``)."""
+    (``MarchineLearningAlgorithm.txt:62-270``). The reference's label
+    and feature indexers are one multi-col StringIndexer: one fit per
+    fold instead of two, same per-column ``frequencyDesc`` labels."""
     feature_cols = ["priority", "segment", "nation_name"]
     index_cols = [f"{c}_index" for c in feature_cols]
-    label_indexer = make_string_indexer("status", "label_index")
-    feat_indexer = make_string_indexer(feature_cols, index_cols)
+    indexer = make_string_indexer(["status", *feature_cols], ["label_index", *index_cols])
     assembler = make_vector_assembler(index_cols)
     rf = make_random_forest(num_trees=10)
-    pipeline = make_pipeline([label_indexer, feat_indexer, assembler, rf])
+    pipeline = make_pipeline([indexer, assembler, rf])
     evaluator = make_accuracy_evaluator()
     cv = make_cross_validator(pipeline, evaluator, make_param_grid(rf))
     train, test = seeded_random_split(df, (0.8, 0.2), seed=REFERENCE_SPLIT_SEED)
@@ -134,14 +136,16 @@ def arc_pipeline(df: DataFrame, *, minority: str = "1-URGENT", majority: str = "
     explicit indexer fit/transform (M3) -> OneHotEncoder (M4) ->
     assembler over the one-hot vectors -> RF -> CV -> accuracy
     (``A related code.txt:62-192``). Binary label like FATAL/RESOLVED.
+    The label and feature indexers are one multi-col StringIndexer
+    (one fit, same per-column labels as two).
     """
     two_class = df.filter(F.col("priority").isin(minority, majority))
     balanced = undersample_balance(two_class, "priority", minority, majority, seed=REFERENCE_SPLIT_SEED)
 
-    label_indexer = make_string_indexer("priority", "label_index")
-    feat_indexer = make_string_indexer(["segment", "nation_name"], ["segment_index", "nation_index"])
-    _, indexed = fit_transform(label_indexer, balanced)          # M3: explicit chaining
-    _, indexed = fit_transform(feat_indexer, indexed)
+    indexer = make_string_indexer(
+        ["priority", "segment", "nation_name"], ["label_index", "segment_index", "nation_index"]
+    )
+    _, indexed = fit_transform(indexer, balanced)          # M3: explicit chaining
     encoder = make_one_hot_encoder(["segment_index", "nation_index"], ["segment_vec", "nation_vec"])
     _, encoded = fit_transform(encoder, indexed)
 

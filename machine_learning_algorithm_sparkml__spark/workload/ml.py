@@ -189,13 +189,12 @@ def _rf_predictions(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_session = _RF_PREDS_CACHE.setdefault(spark, {})
     if sf_dir not in per_session:
         df = covid_like_frame(spark, sf_dir)
-        _, indexed = fit_transform(make_string_indexer("status", "label_index"), df)
         _, indexed = fit_transform(
             make_string_indexer(
-                ["priority", "segment", "nation_name"],
-                ["priority_index", "segment_index", "nation_index"],
+                ["status", "priority", "segment", "nation_name"],
+                ["label_index", "priority_index", "segment_index", "nation_index"],
             ),
-            indexed,
+            df,
         )
         assembled = make_vector_assembler(
             ["priority_index", "segment_index", "nation_index"]
@@ -238,10 +237,10 @@ def q_ml_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # frame serializes the RF aggregation; no-op at cluster scale)
     df = spread_rows(covid_like_frame(spark, sf_dir), "row_id")
     feature_cols = ["priority", "segment", "nation_name"]
+    index_cols = [f"{c}_index" for c in feature_cols]
     pipeline = make_pipeline([
-        make_string_indexer("status", "label_index"),
-        make_string_indexer(feature_cols, [f"{c}_index" for c in feature_cols]),
-        make_vector_assembler([f"{c}_index" for c in feature_cols]),
+        make_string_indexer(["status", *feature_cols], ["label_index", *index_cols]),
+        make_vector_assembler(index_cols),
         make_random_forest(num_trees=10, max_depth=4),
     ])
     model = pipeline.fit(df)
@@ -403,10 +402,10 @@ def q_ml_model_save_load(spark: SparkSession, sf_dir: str) -> DataFrame:
         covid_like_frame(spark, sf_dir).filter(F.col("row_id") % 4 == 0), "row_id"
     ).cache()  # spread before the fit — see _rf_predictions
     feature_cols = ["priority", "segment", "nation_name"]
+    index_cols = [f"{c}_index" for c in feature_cols]
     pipeline = make_pipeline([
-        make_string_indexer("status", "label_index"),
-        make_string_indexer(feature_cols, [f"{c}_index" for c in feature_cols]),
-        make_vector_assembler([f"{c}_index" for c in feature_cols]),
+        make_string_indexer(["status", *feature_cols], ["label_index", *index_cols]),
+        make_vector_assembler(index_cols),
         make_random_forest(num_trees=10, max_depth=4),
     ])
     model = pipeline.fit(df)

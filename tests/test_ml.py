@@ -4,8 +4,22 @@ split sizes sum to total; balanced ratio ~1; accuracy in [0,1] and
 
 from __future__ import annotations
 
+import time
+import uuid
+from multiprocessing.pool import ThreadPool
+
 import pytest
+from pyspark import SparkContext
+from pyspark.ml import Estimator, Model
+from pyspark.ml.evaluation import Evaluator
+from pyspark.ml.param import Param, Params
 from pyspark.sql import functions as F
+
+from machine_learning_algorithm_sparkml__spark.ml import (
+    make_cross_validator,
+    make_pipeline,
+    make_string_indexer,
+)
 
 from machine_learning_algorithm_sparkml__spark.ml.pipelines import (
     arc_pipeline,
@@ -271,3 +285,105 @@ def test_mla_cv_best_params_stable_under_fixed_seed(covid_df):
     assert rf_a.getImpurity() == rf_b.getImpurity()
     assert a.model.avgMetrics == b.model.avgMetrics
     assert a.accuracy == b.accuracy
+
+
+class _Identity(Model):
+    def _transform(self, dataset):
+        return dataset
+
+
+class _CountingEstimator(Estimator):
+    """Records every ``_fit`` (with its ``depth``) in a list its copies share."""
+
+    depth = Param(Params._dummy(), "depth", "a tunable stand-in param")
+
+    def __init__(self, calls: list):
+        super().__init__()
+        self.calls = calls
+        self._setDefault(depth=0)
+
+    def _fit(self, dataset):
+        self.calls.append(self.getOrDefault(self.depth))
+        return _Identity()
+
+
+class _LocalPropertyProbe(Evaluator):
+    """1.0 when a local property this thread set survives a short sleep,
+    i.e. no concurrently running task shares this thread's properties."""
+
+    def _evaluate(self, dataset):
+        sc = SparkContext._active_spark_context
+        token = str(uuid.uuid4())
+        sc.setLocalProperty("test.probe", token)
+        time.sleep(0.05)
+        return float(sc.getLocalProperty("test.probe") == token)
+
+
+def test_pipeline_fit_multiple_fits_untuned_prefix_once(spark):
+    prefix_calls, tuned_calls = [], []
+    prefix, tuned = _CountingEstimator(prefix_calls), _CountingEstimator(tuned_calls)
+    maps = [{tuned.depth: d} for d in range(4)]
+    fits = make_pipeline([prefix, tuned]).fitMultiple(spark.range(4), maps)
+    with ThreadPool(4) as pool:
+        out = pool.map(lambda _: next(fits), range(4))
+    assert len(prefix_calls) == 1
+    assert sorted(tuned_calls) == [0, 1, 2, 3]
+    assert sorted(j for j, _ in out) == [0, 1, 2, 3]
+    assert len({id(model.stages[0]) for _, model in out}) == 1  # one shared prefix model
+    with pytest.raises(StopIteration):
+        next(fits)
+
+
+def test_pipeline_fit_multiple_falls_back_when_first_stage_tuned(spark):
+    prefix_calls, tuned_calls = [], []
+    prefix, tuned = _CountingEstimator(prefix_calls), _CountingEstimator(tuned_calls)
+    maps = [{prefix.depth: d} for d in range(4)]
+    fits = make_pipeline([prefix, tuned]).fitMultiple(spark.range(4), maps)
+    with ThreadPool(4) as pool:
+        pool.map(lambda _: next(fits), range(4))
+    assert sorted(prefix_calls) == [0, 1, 2, 3]
+    assert len(tuned_calls) == 4
+
+
+def test_cross_validator_one_pool_prefix_per_fold_and_private_thread_properties(spark):
+    prefix_calls, tuned_calls = [], []
+    prefix, tuned = _CountingEstimator(prefix_calls), _CountingEstimator(tuned_calls)
+    maps = [{tuned.depth: d} for d in range(4)]
+    cv = make_cross_validator(
+        make_pipeline([prefix, tuned]), _LocalPropertyProbe(), maps, parallelism=4
+    )
+    model = cv.fit(spark.range(30))
+    assert len(prefix_calls) == 3 + 1  # once per fold, plus the best map's refit
+    assert len(tuned_calls) == 3 * 4 + 1
+    # every task ran on local properties no concurrent task could overwrite
+    assert model.avgMetrics == [1.0] * 4
+
+
+def test_engine_cross_validator_equals_stock(covid_df, monkeypatch):
+    """MLA through the engine's Pipeline/CrossValidator and through
+    stock pyspark's: the same fold metrics, best params and accuracy."""
+    from pyspark.ml import Pipeline
+    from pyspark.ml.tuning import CrossValidator
+
+    from machine_learning_algorithm_sparkml__spark.ml import pipelines
+
+    engine = mla_pipeline(covid_df)
+    monkeypatch.setattr(pipelines, "make_pipeline", lambda stages: Pipeline(stages=list(stages)))
+    monkeypatch.setattr(
+        pipelines, "make_cross_validator",
+        lambda *a, **k: make_cross_validator(*a, **k)._copyValues(CrossValidator()),
+    )
+    stock = mla_pipeline(covid_df)
+    assert engine.model.avgMetrics == stock.model.avgMetrics
+    rf_e, rf_s = engine.model.bestModel.stages[-1], stock.model.bestModel.stages[-1]
+    assert (rf_e.getMaxDepth(), rf_e.getImpurity()) == (rf_s.getMaxDepth(), rf_s.getImpurity())
+    assert engine.accuracy == stock.accuracy
+
+
+def test_multi_column_indexer_labels_equal_separate_indexers(covid_df):
+    cols = ["priority", "segment", "nation_name"]
+    idx = [f"{c}_index" for c in cols]
+    merged = make_string_indexer(["status", *cols], ["label_index", *idx]).fit(covid_df)
+    label = make_string_indexer("status", "label_index").fit(covid_df)
+    feats = make_string_indexer(cols, idx).fit(covid_df)
+    assert merged.labelsArray == label.labelsArray + feats.labelsArray
