@@ -261,15 +261,11 @@ def make_warc_media_shard(rows: list[tuple[int, str]], shard: int) -> bytes:
     """Mixed-content sibling of :func:`make_warc_shard`: text docs keep
     their utf-8 HTTP envelope; media docs (:func:`is_media_doc`) carry
     the SAME real JPEG bytes the ``multimodal_jpeg_decode`` fixture
-    encodes (operators/multimodal.py:make_jpeg over per-block
-    portable-md5 values), under ``image/jpeg``. One container, two
-    payload kinds — the shape a real crawl shard has."""
-    import numpy as np
-
+    encodes (operators/multimodal.py:jpeg_payload), under
+    ``image/jpeg``. One container, two payload kinds — the shape a
+    real crawl shard has."""
     from machine_learning_algorithm_sparkml__spark.operators.multimodal import (
-        _jpeg_block_values,
-        jpeg_dims,
-        make_jpeg,
+        jpeg_payload,
     )
 
     out = bytearray()
@@ -284,11 +280,7 @@ def make_warc_media_shard(rows: list[tuple[int, str]], shard: int) -> bytes:
     )
     for doc_id, text in rows:
         if is_media_doc(doc_id):
-            w, h = jpeg_dims(doc_id)
-            vals = _jpeg_block_values(doc_id, (w // 8) * (h // 8))
-            grid = np.array(vals, dtype=np.uint8).reshape(h // 8, w // 8)
-            gray = np.kron(grid, np.ones((8, 8), dtype=np.uint8))
-            body = make_jpeg(w, h, np.repeat(gray[..., None], 3, axis=-1).tobytes())
+            body = jpeg_payload(doc_id)
             ctype = b"image/jpeg"
         else:
             body = text.encode("utf-8")

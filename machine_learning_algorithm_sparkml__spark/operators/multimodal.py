@@ -4,45 +4,44 @@ Images/audio/video are carried as opaque ``binary`` payload columns
 with a typed metadata struct — parquet-native, splittable, and
 prunable (readers that only need metadata never touch the bytes).
 
-The Spark-side plumbing here is REAL and tested: schemas, Arrow-batched
-``mapInPandas`` operators, deterministic partitioning. Codec coverage
-(VERDICT r12 #4): **uncompressed 24-bit BMP is decoded for real** —
-pure-struct/numpy header parse, bottom-up row order, 4-byte row
-padding (:func:`decode_bmp`) — because a BMP needs no codec library.
-**8-bit truecolor PNG is decoded for real too** (:func:`decode_png`):
-PNG's compression is DEFLATE, which the Python *standard library*
-ships (``zlib``), so the chunk walk, CRC verification, IDAT inflate,
-and all five scanline filter reconstructions (None/Sub/Up/Average/
-Paeth) need no external codec. **GIF is decoded for real as well**
-(:func:`decode_gif`): its LZW is implemented from scratch in this
-module (:func:`_lzw_compress` / :func:`_lzw_decompress`), so no
-library is involved at all. **Baseline JPEG is decoded for real too**
-(:func:`decode_jpeg`): canonical Huffman tables rebuilt from DHT,
-differential-DC/run-length-AC entropy decode with byte un-stuffing,
-dequantization, 2-D IDCT, and YCbCr->RGB — all numpy/struct, no
-library. Formats whose codecs genuinely are absent from this
-container (video/compressed audio) remain STUBBED behind
-``decode_stub``: a clearly-marked deterministic fake that derives
-"decoded" properties from the payload bytes and *raises* on those
-mimes rather than faking a decode. Swapping in a real decoder
-changes ONE function body, not the pipeline.
+The codecs are written from scratch with numpy, ``struct`` and the
+standard library's ``zlib`` — no codec library: uncompressed BMP,
+mono PCM WAV, PNG (truecolor, palette, gray/alpha/16-bit, RGBA,
+Adam7-interlaced), GIF with its own LZW, and JPEG (baseline 4:4:4 /
+4:2:0 / 4:1:1, restart intervals, progressive, grayscale, 12-bit);
+plus container walks that read metadata without decoding samples:
+MP4 boxes, FLAC STREAMINFO, MP3 frame headers and Exif IFDs.
+
+Spark sees each codec through ONE of two Arrow-batched paths:
+
+- :func:`encode_codec` builds ``doc_id -> payload`` rows through a
+  codec's row in :data:`ENCODERS` (mime, module-level ``doc_id ->
+  bytes`` function over a portable md5 fixture) and attaches the
+  metadata struct JVM-side;
+- :func:`decode_codec` projects payloads through a codec's row in
+  :data:`DECODERS` (output schema, module-level ``bytes -> tuple``
+  function) to the integer/string columns the DuckDB oracles replay.
+
+Adding a codec key is one row per direction. :func:`decode_media` is
+the separate mime-dispatching stub behind ``multimodal_decode``: it
+decodes BMP/PNG/GIF/JPEG for real, derives fake dimensions from the
+sha256 of other payloads (:func:`decode_stub`), and *raises* on any
+other image/audio/video mime rather than faking a decode.
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import struct
 import zlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-#: Metadata struct attached to every payload.
-MEDIA_META_SCHEMA = "mime string, n_bytes int, sha256 string"
 
 #: Output schema of the (stubbed) image decode.
 DECODED_SCHEMA = "doc_id long, mime string, width int, height int, n_channels int"
@@ -52,21 +51,22 @@ FEATURE_DIM = 16
 FEATURES_SCHEMA = "doc_id long, features array<float>"
 
 
+def _media_meta(payload: Column, mime: str) -> Column:
+    """The metadata struct attached to every payload (mime, n_bytes,
+    sha256), computed JVM-side."""
+    return F.struct(
+        F.lit(mime).alias("mime"),
+        F.octet_length(payload).alias("n_bytes"),
+        F.sha2(payload, 256).alias("sha256"),
+    ).alias("media_meta")
+
+
 def attach_binary_payload(df: DataFrame, id_col: str, text_col: str, *, mime: str = "application/octet-stream") -> DataFrame:
     """Wrap a column as a binary payload + metadata struct. In this
     repo the payload is the utf-8 text bytes (the testdata has no real
-    media); in production it is the raw media bytes. Metadata is
-    computed JVM-side (octet_length, sha2)."""
+    media); in production it is the raw media bytes."""
     payload = F.encode(F.col(text_col), "utf-8")
-    return df.select(
-        F.col(id_col),
-        payload.alias("payload"),
-        F.struct(
-            F.lit(mime).alias("mime"),
-            F.octet_length(payload).alias("n_bytes"),
-            F.sha2(payload, 256).alias("sha256"),
-        ).alias("media_meta"),
-    )
+    return df.select(F.col(id_col), payload.alias("payload"), _media_meta(payload, mime))
 
 
 def decode_stub(payload: bytes) -> tuple[int, int, int]:
@@ -74,8 +74,9 @@ def decode_stub(payload: bytes) -> tuple[int, int, int]:
     from the payload's sha256. A real implementation would be e.g.
     ``PIL.Image.open(io.BytesIO(payload)).size``.
 
-    Raises ``NotImplementedError`` for payloads claiming a real image
-    mime type — the fake must never masquerade as a real decode."""
+    Never called for image/audio/video mimes: :func:`decode_media`
+    refuses those it cannot really decode — the fake must never
+    masquerade as a real decode."""
     digest = hashlib.sha256(payload).digest()
     width = 64 + digest[0] % 192
     height = 64 + digest[1] % 192
@@ -83,80 +84,47 @@ def decode_stub(payload: bytes) -> tuple[int, int, int]:
     return width, height, channels
 
 
-def decode_media(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
-    """Arrow-batched decode over (id, payload, media_meta) frames.
+def decode_media(df: DataFrame) -> DataFrame:
+    """Arrow-batched decode over (doc_id, payload, media_meta) frames.
 
     ``mapInPandas``: each batch arrives as a pandas DataFrame, the
-    decode loop runs per batch (vectorizable in a real decoder), and
-    only the decoded properties leave the executor — payload bytes
-    never cross back to the JVM.
+    decode loop runs per batch, and only the decoded properties leave
+    the executor — payload bytes never cross back to the JVM.
 
-    ``image/bmp``, ``image/png``, ``image/gif``, and ``image/jpeg``
-    payloads are decoded FOR REAL (:func:`decode_bmp` /
-    :func:`decode_png` / :func:`decode_gif` / :func:`decode_jpeg` —
-    header parse, DEFLATE inflate, from-scratch LZW, baseline
-    Huffman+IDCT; not fakes); other image/audio/video mimes raise, so
-    the stub never masquerades as a decode it cannot do."""
+    Mimes with a prefix in :data:`_REAL_IMAGE_DECODERS` (BMP, PNG,
+    GIF, JPEG) are decoded FOR REAL; other image/audio/video mimes
+    raise, so the stub never masquerades as a decode it cannot do."""
 
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            mimes = pdf["media_meta"].map(lambda m: m["mime"])
-            is_bmp = mimes.str.startswith("image/bmp")
-            is_png = mimes.str.startswith("image/png")
-            is_gif = mimes.str.startswith("image/gif")
-            is_jpeg = mimes.str.startswith("image/jpeg")
-            is_real = is_bmp | is_png | is_gif | is_jpeg
-            if (mimes.str.startswith(("image/", "audio/", "video/")) & ~is_real).any():
-                raise NotImplementedError(
-                    "real media decoding beyond BMP/PNG/GIF/JPEG is stubbed "
-                    "in this environment; swap decode_stub for a codec-backed "
-                    "implementation"
+            rows = []
+            for doc_id, payload, meta in zip(pdf["doc_id"], pdf["payload"], pdf["media_meta"]):
+                mime = meta["mime"]
+                real = next(
+                    (v for k, v in _REAL_IMAGE_DECODERS.items() if mime.startswith(k)), None
                 )
-
-            def _one(row):
-                if row["is_bmp"]:
-                    w, h, _ = decode_bmp(row["payload"])
-                    return w, h, 3
-                if row["is_png"]:
-                    w, h, _ = decode_png(row["payload"])
-                    return w, h, 3
-                if row["is_gif"]:
-                    w, h, _ = decode_gif(row["payload"])
-                    return w, h, 1  # palette-indexed: one channel
-                if row["is_jpeg"]:
-                    w, h, _ = decode_jpeg(row["payload"])
-                    return w, h, 3
-                return decode_stub(row["payload"])
-
-            decoded = pd.DataFrame(
-                {
-                    "payload": pdf["payload"],
-                    "is_bmp": is_bmp,
-                    "is_png": is_png,
-                    "is_gif": is_gif,
-                    "is_jpeg": is_jpeg,
-                }
-            ).apply(_one, axis=1)
+                if real is not None:
+                    decode, n_channels = real
+                    w, h, _ = decode(bytes(payload))
+                    rows.append((doc_id, mime, w, h, n_channels))
+                elif mime.startswith(("image/", "audio/", "video/")):
+                    raise NotImplementedError(
+                        "real media decoding beyond BMP/PNG/GIF/JPEG is stubbed "
+                        "in this environment; swap decode_stub for a codec-backed "
+                        "implementation"
+                    )
+                else:
+                    rows.append((doc_id, mime, *decode_stub(payload)))
             yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "mime": mimes,
-                    "width": decoded.map(lambda t: t[0]),
-                    "height": decoded.map(lambda t: t[1]),
-                    "n_channels": decoded.map(lambda t: t[2]),
-                }
+                rows, columns=["doc_id", "mime", "width", "height", "n_channels"]
             )
 
     return df.mapInPandas(_decode, schema=DECODED_SCHEMA)
 
 
 # --- real uncompressed-BMP codec (no library needed) ---------------------------
-
-#: Output schema of the REAL BMP decode (pixel_sum = exact integer sum
-#: of all decoded pixel bytes — the oracle-comparable projection).
-DECODED_BMP_SCHEMA = "doc_id long, width int, height int, pixel_sum long"
 
 
 def make_bmp(width: int, height: int, pixels: bytes) -> bytes:
@@ -231,16 +199,20 @@ def decode_bmp(payload: bytes) -> tuple[int, int, np.ndarray]:
     return width, h, arr
 
 
-def _bmp_pixel_bytes(doc_id: int, n: int) -> bytes:
-    """Deterministic portable pixel fixture: byte ``p`` is the
-    md5-60bit parse of ``'bmp:doc_id:p'`` mod 256 — the same hash
-    family as ``dedup.portable_hash60``, so DuckDB regenerates the
-    identical pixel array from generate_series + md5 and the decoded
-    (width, height, pixel_sum) projection is oracle-checkable."""
-    return bytes(
-        int(hashlib.md5(f"bmp:{doc_id}:{p}".encode()).hexdigest()[:15], 16) % 256
-        for p in range(n)
-    )
+def fixture_values(tag: str, doc_id: int, n: int, mod: int = 256) -> list[int]:
+    """The deterministic portable fixture every codec key draws from:
+    value ``i`` is the md5-60bit parse of ``'<tag>:<doc_id>:<i>'`` mod
+    ``mod`` — the same hash family as ``dedup.portable_hash60``, so
+    DuckDB regenerates the identical array from generate_series + md5
+    and each decoded projection is oracle-checkable (the oracle
+    regenerates the bytes the DECODER must recover, so a parser bug
+    is a value mismatch, not a silent pass). Every key has its own
+    tag, so keys are independent; the tags and moduli are part of the
+    oracle contract (``workload/llm.py`` replays them verbatim)."""
+    return [
+        int(hashlib.md5(f"{tag}:{doc_id}:{i}".encode()).hexdigest()[:15], 16) % mod
+        for i in range(n)
+    ]
 
 
 def bmp_dims(doc_id: int) -> tuple[int, int]:
@@ -251,83 +223,23 @@ def bmp_dims(doc_id: int) -> tuple[int, int]:
     return 5 + doc_id % 4, 3 + doc_id % 5
 
 
-def spread_for_kernel(df: DataFrame) -> DataFrame:
-    """Partition a compute-heavy Arrow kernel's input by COMPUTE, not
-    by input bytes. File bin-packing sizes scan partitions by BYTES
-    (maxPartitionBytes/openCostInBytes), which is right for scans and
-    wrong for per-row-expensive Python kernels: the codec keys' input
-    is a tiny id projection, so a small corpus bin-packs to ONE
-    partition and the whole encode+decode pipeline serializes onto one
-    core (measured: the JPEG key read 4.7 s single-partition vs 2.8 s
-    over 10x MORE docs on a 32-file layout — r14 witness). One
-    round-robin exchange of the id column decouples kernel parallelism
-    from storage layout; the shuffled payload is the projected input
-    (ids), which stays negligible at any corpus size."""
-    sc = df.sparkSession.sparkContext
-    return df.repartition(sc.defaultParallelism)
+def bmp_payload(doc_id: int) -> bytes:
+    """REAL BMP of the ``'bmp'`` pixel fixture at :func:`bmp_dims`."""
+    w, h = bmp_dims(doc_id)
+    return make_bmp(w, h, bytes(fixture_values("bmp", doc_id, w * h * 3)))
 
 
-def encode_bmp_media(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
-    """Build REAL BMP payloads per row (Arrow-batched kernel; bytes are
-    born executor-side and never leave as anything but the payload
-    column), then attach the standard metadata struct JVM-side."""
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            payloads = []
-            for did in pdf[id_col]:
-                did = int(did)
-                w, h = bmp_dims(did)
-                payloads.append(make_bmp(w, h, _bmp_pixel_bytes(did, w * h * 3)))
-            yield pd.DataFrame({"doc_id": pdf[id_col], "payload": payloads})
-
-    out = spread_for_kernel(df).mapInPandas(_encode, schema="doc_id long, payload binary")
-    return out.select(
-        "doc_id",
-        "payload",
-        F.struct(
-            F.lit("image/bmp").alias("mime"),
-            F.octet_length("payload").alias("n_bytes"),
-            F.sha2("payload", 256).alias("sha256"),
-        ).alias("media_meta"),
-    )
-
-
-def decode_bmp_media(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
-    """Arrow-batched REAL decode of BMP payloads to the
-    oracle-comparable projection (doc_id, width, height, pixel_sum) —
-    the decode runs entirely executor-side; only three ints per image
-    cross back to the JVM."""
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            widths, heights, sums = [], [], []
-            for payload in pdf["payload"]:
-                w, h, pixels = decode_bmp(bytes(payload))
-                widths.append(w)
-                heights.append(h)
-                sums.append(int(pixels.sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "width": widths,
-                    "height": heights,
-                    "pixel_sum": sums,
-                }
-            )
-
-    return df.mapInPandas(_decode, schema=DECODED_BMP_SCHEMA)
+def _value_sums(decode: Callable[[bytes], tuple], payload: bytes) -> tuple[int, int, int]:
+    """(width, height, exact integer sum of every decoded byte) — the
+    oracle-comparable projection of an image decode: the decode runs
+    entirely executor-side and only three ints per image cross back
+    to the JVM. Bound to a decoder with ``functools.partial`` in
+    :data:`DECODERS`."""
+    w, h, px = decode(payload)
+    return w, h, int(px.astype(np.int64).sum())
 
 
 # --- real WAV (RIFF/PCM) codec — the audio sibling of the BMP path ------------
-
-#: Output schema of the REAL WAV decode (amp_sum = exact signed sum of
-#: all decoded 16-bit samples — the oracle-comparable projection).
-DECODED_WAV_SCHEMA = "doc_id long, sample_rate int, n_samples int, amp_sum long"
 
 
 def make_wav(sample_rate: int, samples: "np.ndarray", *, comment: bytes = b"spark-graft") -> bytes:
@@ -382,20 +294,6 @@ def decode_wav(payload: bytes) -> tuple[int, "np.ndarray"]:
     return sample_rate, np.frombuffer(data, dtype="<i2")
 
 
-def _wav_samples(doc_id: int, n: int) -> "np.ndarray":
-    """Deterministic portable sample fixture: sample ``i`` is the
-    md5-60bit parse of ``'wav:doc_id:i'`` mod 65536, shifted to the
-    signed int16 range — DuckDB regenerates the identical signal."""
-    return np.array(
-        [
-            int(hashlib.md5(f"wav:{doc_id}:{i}".encode()).hexdigest()[:15], 16) % 65536
-            - 32768
-            for i in range(n)
-        ],
-        dtype=np.int16,
-    )
-
-
 def wav_params(doc_id: int) -> tuple[int, int]:
     """Per-doc fixture (sample_rate, n_samples): three standard rates,
     lengths 40-56 (odd and even — an odd sample count makes the data
@@ -404,65 +302,22 @@ def wav_params(doc_id: int) -> tuple[int, int]:
     return 8000 + (doc_id % 3) * 4000, 40 + doc_id % 17
 
 
-def encode_wav_media(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
-    """Build REAL WAV payloads per row (Arrow-batched kernel), then
-    attach the standard metadata struct JVM-side."""
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            payloads = []
-            for did in pdf[id_col]:
-                did = int(did)
-                rate, n = wav_params(did)
-                payloads.append(make_wav(rate, _wav_samples(did, n)))
-            yield pd.DataFrame({"doc_id": pdf[id_col], "payload": payloads})
-
-    out = spread_for_kernel(df).mapInPandas(_encode, schema="doc_id long, payload binary")
-    return out.select(
-        "doc_id",
-        "payload",
-        F.struct(
-            F.lit("audio/wav").alias("mime"),
-            F.octet_length("payload").alias("n_bytes"),
-            F.sha2("payload", 256).alias("sha256"),
-        ).alias("media_meta"),
-    )
+def wav_payload(doc_id: int) -> bytes:
+    """REAL WAV of the ``'wav'`` sample fixture at :func:`wav_params`:
+    sample ``i`` is the fixture value mod 65536 shifted to the signed
+    int16 range, so DuckDB regenerates the identical signal."""
+    rate, n = wav_params(doc_id)
+    return make_wav(rate, np.array(fixture_values("wav", doc_id, n, 65536)) - 32768)
 
 
-def decode_wav_media(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
-    """Arrow-batched REAL decode of WAV payloads to the
-    oracle-comparable projection (doc_id, sample_rate, n_samples,
-    amp_sum) — bytes stay executor-side."""
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rates, counts, sums = [], [], []
-            for payload in pdf["payload"]:
-                rate, samples = decode_wav(bytes(payload))
-                rates.append(rate)
-                counts.append(len(samples))
-                sums.append(int(samples.astype(np.int64).sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "sample_rate": rates,
-                    "n_samples": counts,
-                    "amp_sum": sums,
-                }
-            )
-
-    return df.mapInPandas(_decode, schema=DECODED_WAV_SCHEMA)
+def wav_projection(payload: bytes) -> tuple[int, int, int]:
+    """(sample_rate, n_samples, amp_sum) of the REAL WAV decode —
+    amp_sum is the exact signed sum of every 16-bit sample."""
+    rate, samples = decode_wav(payload)
+    return rate, len(samples), int(samples.astype(np.int64).sum())
 
 
 # --- real PNG codec (DEFLATE via stdlib zlib — no external library) ------------
-
-#: Output schema of the REAL PNG decode (pixel_sum = exact integer sum
-#: of all decoded RGB bytes — the oracle-comparable projection).
-DECODED_PNG_SCHEMA = "doc_id long, width int, height int, pixel_sum long"
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
@@ -824,17 +679,6 @@ def decode_png(payload: bytes, *, verify_crc: bool = True) -> tuple[int, int, np
     return width, height, out.astype(np.uint8)
 
 
-def _png_pixel_bytes(doc_id: int, n: int) -> bytes:
-    """Deterministic portable pixel fixture (same md5-60bit family as
-    the BMP/WAV fixtures): byte ``p`` = md5('png:doc_id:p') % 256, so
-    DuckDB regenerates the identical array and the decoded
-    (width, height, pixel_sum) projection is oracle-checkable."""
-    return bytes(
-        int(hashlib.md5(f"png:{doc_id}:{p}".encode()).hexdigest()[:15], 16) % 256
-        for p in range(n)
-    )
-
-
 def png_dims(doc_id: int) -> tuple[int, int]:
     """Per-doc fixture dimensions: height 5-8 keeps every image tall
     enough that the y%5 filter cycle exercises ALL FIVE scanline
@@ -843,67 +687,14 @@ def png_dims(doc_id: int) -> tuple[int, int]:
     return 4 + doc_id % 5, 5 + doc_id % 4
 
 
-def encode_png_media(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
-    """Build REAL PNG payloads per row (Arrow-batched kernel; the
-    DEFLATE compression runs executor-side), then attach the standard
-    metadata struct JVM-side."""
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            payloads = []
-            for did in pdf[id_col]:
-                did = int(did)
-                w, h = png_dims(did)
-                payloads.append(make_png(w, h, _png_pixel_bytes(did, w * h * 3)))
-            yield pd.DataFrame({"doc_id": pdf[id_col], "payload": payloads})
-
-    out = spread_for_kernel(df).mapInPandas(_encode, schema="doc_id long, payload binary")
-    return out.select(
-        "doc_id",
-        "payload",
-        F.struct(
-            F.lit("image/png").alias("mime"),
-            F.octet_length("payload").alias("n_bytes"),
-            F.sha2("payload", 256).alias("sha256"),
-        ).alias("media_meta"),
-    )
-
-
-def decode_png_media(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
-    """Arrow-batched REAL decode of PNG payloads to the
-    oracle-comparable projection (doc_id, width, height, pixel_sum) —
-    inflate + filter reconstruction run entirely executor-side; only
-    three ints per image cross back to the JVM."""
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            widths, heights, sums = [], [], []
-            for payload in pdf["payload"]:
-                w, h, pixels = decode_png(bytes(payload))
-                widths.append(w)
-                heights.append(h)
-                sums.append(int(pixels.astype(np.int64).sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "width": widths,
-                    "height": heights,
-                    "pixel_sum": sums,
-                }
-            )
-
-    return df.mapInPandas(_decode, schema=DECODED_PNG_SCHEMA)
+def png_payload(doc_id: int) -> bytes:
+    """REAL truecolor PNG of the ``'png'`` pixel fixture at
+    :func:`png_dims` (the DEFLATE compression runs executor-side)."""
+    w, h = png_dims(doc_id)
+    return make_png(w, h, bytes(fixture_values("png", doc_id, w * h * 3)))
 
 
 # --- real GIF codec (LZW implemented from scratch — no library at all) ---------
-
-#: Output schema of the REAL GIF decode (index_sum = exact integer sum
-#: of all decoded palette indices — the oracle-comparable projection).
-DECODED_GIF_SCHEMA = "doc_id long, width int, height int, index_sum long"
 
 
 def _lzw_compress(indices: bytes, min_code_size: int) -> bytes:
@@ -1147,17 +938,6 @@ def decode_gif(payload: bytes) -> tuple[int, int, np.ndarray]:
     raise ValueError("no image data block found")
 
 
-def _gif_indices(doc_id: int, n: int) -> bytes:
-    """Deterministic portable index fixture (the md5-60bit family):
-    index ``p`` = md5('gif:doc_id:p') % 256 — DuckDB regenerates the
-    identical array, so the decoded (width, height, index_sum)
-    projection is oracle-checkable through real LZW compression."""
-    return bytes(
-        int(hashlib.md5(f"gif:{doc_id}:{p}".encode()).hexdigest()[:15], 16) % 256
-        for p in range(n)
-    )
-
-
 def gif_dims(doc_id: int) -> tuple[int, int]:
     """Per-doc fixture dimensions: 6-9 x 4-8 keeps every image large
     enough (≥24 indices) that the LZW dictionary genuinely grows and
@@ -1166,59 +946,12 @@ def gif_dims(doc_id: int) -> tuple[int, int]:
     return 6 + doc_id % 4, 4 + doc_id % 5
 
 
-def encode_gif_media(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
-    """Build REAL GIF payloads per row (Arrow-batched kernel; LZW runs
-    executor-side), then attach the standard metadata struct
-    JVM-side."""
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            payloads = []
-            for did in pdf[id_col]:
-                did = int(did)
-                w, h = gif_dims(did)
-                payloads.append(make_gif(w, h, _gif_indices(did, w * h)))
-            yield pd.DataFrame({"doc_id": pdf[id_col], "payload": payloads})
-
-    out = spread_for_kernel(df).mapInPandas(_encode, schema="doc_id long, payload binary")
-    return out.select(
-        "doc_id",
-        "payload",
-        F.struct(
-            F.lit("image/gif").alias("mime"),
-            F.octet_length("payload").alias("n_bytes"),
-            F.sha2("payload", 256).alias("sha256"),
-        ).alias("media_meta"),
-    )
-
-
-def decode_gif_media(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
-    """Arrow-batched REAL decode of GIF payloads to the
-    oracle-comparable projection (doc_id, width, height, index_sum) —
-    LZW decompression runs entirely executor-side."""
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            widths, heights, sums = [], [], []
-            for payload in pdf["payload"]:
-                w, h, idx = decode_gif(bytes(payload))
-                widths.append(w)
-                heights.append(h)
-                sums.append(int(idx.astype(np.int64).sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "width": widths,
-                    "height": heights,
-                    "index_sum": sums,
-                }
-            )
-
-    return df.mapInPandas(_decode, schema=DECODED_GIF_SCHEMA)
+def gif_payload(doc_id: int) -> bytes:
+    """REAL GIF of the ``'gif'`` index fixture at :func:`gif_dims`:
+    DuckDB regenerates the index array the decoder must recover
+    through real LZW compression."""
+    w, h = gif_dims(doc_id)
+    return make_gif(w, h, bytes(fixture_values("gif", doc_id, w * h)))
 
 
 def extract_features(df: DataFrame, *, id_col: str = "doc_id", dim: int = FEATURE_DIM) -> DataFrame:
@@ -1260,10 +993,6 @@ def frame_sample(df: DataFrame, *, id_col: str = "doc_id", n_frames: int = 4) ->
 
 
 # --- real JPEG codec (baseline sequential: Huffman + DCT + YCbCr, from scratch) ---
-
-#: Output schema of the REAL JPEG decode (pixel_sum = exact integer sum
-#: of all decoded RGB bytes — the oracle-comparable projection).
-DECODED_JPEG_SCHEMA = "doc_id long, width int, height int, pixel_sum long"
 
 #: Orthonormal 8-point DCT-II basis: F = C @ f @ C.T, f = C.T @ F @ C.
 _DCT_C = np.array(
@@ -2007,77 +1736,37 @@ def jpeg_dims(doc_id: int) -> tuple[int, int]:
     return 8 * (1 + doc_id % 3), 8 * (1 + doc_id % 4)
 
 
-def _jpeg_block_values(doc_id: int, n_blocks: int) -> list[int]:
-    """Deterministic portable per-BLOCK gray values (md5-60bit family):
-    block ``b`` = md5('jpeg:doc_id:b') % 256. Flat 8x8 blocks are what
+def _flat_blocks(
+    tag: str, doc_id: int, width: int, height: int, block: tuple[int, int],
+    *, mod: int = 256, dtype=np.uint8,
+) -> np.ndarray:
+    """The JPEG family's fixture: a (height, width) sample plane that
+    is FLAT per ``block`` = (rows, cols) region, one
+    :func:`fixture_values` value per region. Flat regions are what
     make a LOSSY codec oracle-checkable: with the DC quant step of 8
-    they survive quantize->dequantize->IDCT bit-exactly (see _Q_LUMA),
-    while still driving every piece of real machinery — varying DC
-    categories, negative differentials, EXTEND, EOB, byte stuffing."""
-    return [
-        int(hashlib.md5(f"jpeg:{doc_id}:{b}".encode()).hexdigest()[:15], 16) % 256
-        for b in range(n_blocks)
-    ]
+    a flat 8x8 block survives quantize->dequantize->IDCT bit-exactly
+    (see _Q_LUMA), and the chroma mean of a flat region (4:2:0,
+    4:1:1) is exact — while every piece of real machinery still runs:
+    varying DC categories, negative differentials, EXTEND, EOB, byte
+    stuffing."""
+    bh, bw = block
+    vals = fixture_values(tag, doc_id, (height // bh) * (width // bw), mod)
+    grid = np.array(vals, dtype=dtype).reshape(height // bh, width // bw)
+    return np.kron(grid, np.ones((bh, bw), dtype=dtype))
 
 
-def encode_jpeg_media(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
-    """Build REAL baseline JPEG payloads per row (Arrow-batched kernel;
-    DCT + Huffman coding run executor-side), then attach the standard
-    metadata struct JVM-side."""
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            payloads = []
-            for did in pdf[id_col]:
-                did = int(did)
-                w, h = jpeg_dims(did)
-                vals = _jpeg_block_values(did, (w // 8) * (h // 8))
-                grid = np.array(vals, dtype=np.uint8).reshape(h // 8, w // 8)
-                gray = np.kron(grid, np.ones((8, 8), dtype=np.uint8))
-                rgb = np.repeat(gray[..., None], 3, axis=-1)
-                payloads.append(make_jpeg(w, h, rgb.tobytes()))
-            yield pd.DataFrame({"doc_id": pdf[id_col], "payload": payloads})
-
-    out = spread_for_kernel(df).mapInPandas(_encode, schema="doc_id long, payload binary")
-    return out.select(
-        "doc_id",
-        "payload",
-        F.struct(
-            F.lit("image/jpeg").alias("mime"),
-            F.octet_length("payload").alias("n_bytes"),
-            F.sha2("payload", 256).alias("sha256"),
-        ).alias("media_meta"),
-    )
+def _gray_rgb(gray: np.ndarray) -> bytes:
+    """Replicate a gray plane to interleaved RGB bytes (R = G = B)."""
+    return np.repeat(gray[..., None], 3, axis=-1).tobytes()
 
 
-def decode_jpeg_media(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
-    """Arrow-batched REAL decode of JPEG payloads to the
-    oracle-comparable projection (doc_id, width, height, pixel_sum) —
-    Huffman + IDCT + color conversion run entirely executor-side; only
-    three ints per image cross back to the JVM."""
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            widths, heights, sums = [], [], []
-            for payload in pdf["payload"]:
-                w, h, pixels = decode_jpeg(bytes(payload))
-                widths.append(w)
-                heights.append(h)
-                sums.append(int(pixels.astype(np.int64).sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "width": widths,
-                    "height": heights,
-                    "pixel_sum": sums,
-                }
-            )
-
-    return df.mapInPandas(_decode, schema=DECODED_JPEG_SCHEMA)
+def jpeg_payload(doc_id: int) -> bytes:
+    """REAL baseline 4:4:4 JPEG of the ``'jpeg'`` flat-8x8-block
+    fixture at :func:`jpeg_dims` (DCT + Huffman coding run
+    executor-side); each block contributes 64 pixels x 3 channels x
+    its value to the decoded pixel_sum."""
+    w, h = jpeg_dims(doc_id)
+    return make_jpeg(w, h, _gray_rgb(_flat_blocks("jpeg", doc_id, w, h, (8, 8))))
 
 
 def jpeg420_dims(doc_id: int) -> tuple[int, int]:
@@ -2087,46 +1776,15 @@ def jpeg420_dims(doc_id: int) -> tuple[int, int]:
     return 16 * (1 + doc_id % 2), 16 * (1 + doc_id % 3)
 
 
-def _jpeg420_macroblock_values(doc_id: int, n_mb: int) -> list[int]:
-    """Per-16x16-MACROBLOCK portable gray values: flat macroblocks keep
-    4:2:0 bit-exact end to end — all four Y blocks of an MCU are flat
-    (DC step 8 divides them), and the 2x2 chroma mean of a flat region
-    is exact — so the lossy subsampled pipeline is oracle-replayable."""
-    return [
-        int(hashlib.md5(f"jpeg420:{doc_id}:{m}".encode()).hexdigest()[:15], 16) % 256
-        for m in range(n_mb)
-    ]
-
-
-def encode_jpeg420_media(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
-    """4:2:0 sibling of :func:`encode_jpeg_media` — the subsampled
-    layout nearly every web JPEG uses."""
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            payloads = []
-            for did in pdf[id_col]:
-                did = int(did)
-                w, h = jpeg420_dims(did)
-                vals = _jpeg420_macroblock_values(did, (w // 16) * (h // 16))
-                grid = np.array(vals, dtype=np.uint8).reshape(h // 16, w // 16)
-                gray = np.kron(grid, np.ones((16, 16), dtype=np.uint8))
-                rgb = np.repeat(gray[..., None], 3, axis=-1)
-                payloads.append(make_jpeg(w, h, rgb.tobytes(), subsampling="4:2:0"))
-            yield pd.DataFrame({"doc_id": pdf[id_col], "payload": payloads})
-
-    out = spread_for_kernel(df).mapInPandas(_encode, schema="doc_id long, payload binary")
-    return out.select(
-        "doc_id",
-        "payload",
-        F.struct(
-            F.lit("image/jpeg").alias("mime"),
-            F.octet_length("payload").alias("n_bytes"),
-            F.sha2("payload", 256).alias("sha256"),
-        ).alias("media_meta"),
-    )
+def jpeg420_payload(doc_id: int) -> bytes:
+    """4:2:0 sibling of :func:`jpeg_payload` — the subsampled layout
+    nearly every web JPEG uses. The ``'jpeg420'`` fixture is flat per
+    16x16 MACROBLOCK, which keeps 4:2:0 bit-exact end to end: all four
+    Y blocks of an MCU are flat (DC step 8 divides them), and the 2x2
+    chroma mean of a flat region is exact."""
+    w, h = jpeg420_dims(doc_id)
+    gray = _flat_blocks("jpeg420", doc_id, w, h, (16, 16))
+    return make_jpeg(w, h, _gray_rgb(gray), subsampling="4:2:0")
 
 
 def jpeg_dri_dims(doc_id: int) -> tuple[int, int]:
@@ -2142,53 +1800,16 @@ def jpeg_dri_interval(doc_id: int) -> int:
     return 1 + doc_id % 4
 
 
-def _jpeg_dri_block_values(doc_id: int, n_blocks: int) -> list[int]:
-    """Per-block portable gray values for the DRI fixture (md5-60bit
-    family, tag 'jpegdri'). Flat blocks + DC quant step 8 keep the
-    lossy decode bit-exact exactly as in _jpeg_block_values — what the
-    DRI machinery adds is predictor RESETS mid-scan, so the
+def jpeg_dri_payload(doc_id: int) -> bytes:
+    """Restart-interval sibling of :func:`jpeg_payload` — the marker
+    discipline real crawl JPEGs carry (VERDICT r14 #3), decoded by the
+    same :func:`decode_jpeg` with no fixture-specific path. Flat blocks
+    (tag ``'jpegdri'``) + DC quant step 8 keep the lossy decode
+    bit-exact; what DRI adds is predictor RESETS mid-scan, so the
     differential-DC chain is re-anchored at every restart boundary."""
-    return [
-        int(hashlib.md5(f"jpegdri:{doc_id}:{b}".encode()).hexdigest()[:15], 16) % 256
-        for b in range(n_blocks)
-    ]
-
-
-def encode_jpeg_dri_media(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
-    """Restart-interval sibling of :func:`encode_jpeg_media` — the
-    marker discipline real crawl JPEGs carry (VERDICT r14 #3). Decoded
-    by the same :func:`decode_jpeg_media`; no fixture-specific path."""
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            payloads = []
-            for did in pdf[id_col]:
-                did = int(did)
-                w, h = jpeg_dri_dims(did)
-                vals = _jpeg_dri_block_values(did, (w // 8) * (h // 8))
-                grid = np.array(vals, dtype=np.uint8).reshape(h // 8, w // 8)
-                gray = np.kron(grid, np.ones((8, 8), dtype=np.uint8))
-                rgb = np.repeat(gray[..., None], 3, axis=-1)
-                payloads.append(
-                    make_jpeg(
-                        w, h, rgb.tobytes(),
-                        restart_interval=jpeg_dri_interval(did),
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf[id_col], "payload": payloads})
-
-    out = spread_for_kernel(df).mapInPandas(_encode, schema="doc_id long, payload binary")
-    return out.select(
-        "doc_id",
-        "payload",
-        F.struct(
-            F.lit("image/jpeg").alias("mime"),
-            F.octet_length("payload").alias("n_bytes"),
-            F.sha2("payload", 256).alias("sha256"),
-        ).alias("media_meta"),
-    )
+    w, h = jpeg_dri_dims(doc_id)
+    gray = _flat_blocks("jpegdri", doc_id, w, h, (8, 8))
+    return make_jpeg(w, h, _gray_rgb(gray), restart_interval=jpeg_dri_interval(doc_id))
 
 
 # --- progressive (SOF2) JPEG: spectral selection + successive approximation ----
@@ -2460,51 +2081,18 @@ def jpeg_prog_dims(doc_id: int) -> tuple[int, int]:
     return 8 * (1 + doc_id % 4), 8 * (2 + doc_id % 3)
 
 
-def _jpeg_prog_block_values(doc_id: int, n_blocks: int) -> list[int]:
-    """Per-block portable gray values for the progressive fixture
-    (md5-60bit family, tag 'jpegprog'). Flat blocks + DC quant step 8
-    keep the lossy decode bit-exact across the WHOLE 9-scan
-    progression: the DC path runs point transform + refinement for
-    real, the AC scans are pure EOB runs (every AC coefficient is
-    zero), and non-flat AC machinery is pinned by the
-    progressive==baseline equality tests instead."""
-    return [
-        int(hashlib.md5(f"jpegprog:{doc_id}:{b}".encode()).hexdigest()[:15], 16) % 256
-        for b in range(n_blocks)
-    ]
-
-
-def encode_jpeg_prog_media(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
-    """Progressive (SOF2) sibling of :func:`encode_jpeg_media` — the
-    second most common web JPEG layout (VERDICT r14 #7). Decoded by
-    the same :func:`decode_jpeg_media`: decode_jpeg dispatches on the
-    SOF marker, no fixture-specific path."""
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            payloads = []
-            for did in pdf[id_col]:
-                did = int(did)
-                w, h = jpeg_prog_dims(did)
-                vals = _jpeg_prog_block_values(did, (w // 8) * (h // 8))
-                grid = np.array(vals, dtype=np.uint8).reshape(h // 8, w // 8)
-                gray = np.kron(grid, np.ones((8, 8), dtype=np.uint8))
-                rgb = np.repeat(gray[..., None], 3, axis=-1)
-                payloads.append(make_jpeg_progressive(w, h, rgb.tobytes()))
-            yield pd.DataFrame({"doc_id": pdf[id_col], "payload": payloads})
-
-    out = spread_for_kernel(df).mapInPandas(_encode, schema="doc_id long, payload binary")
-    return out.select(
-        "doc_id",
-        "payload",
-        F.struct(
-            F.lit("image/jpeg").alias("mime"),
-            F.octet_length("payload").alias("n_bytes"),
-            F.sha2("payload", 256).alias("sha256"),
-        ).alias("media_meta"),
-    )
+def jpeg_prog_payload(doc_id: int) -> bytes:
+    """Progressive (SOF2) sibling of :func:`jpeg_payload` — the second
+    most common web JPEG layout (VERDICT r14 #7), decoded by the same
+    :func:`decode_jpeg` (it dispatches on the SOF marker). Flat blocks
+    (tag ``'jpegprog'``) + DC quant step 8 keep the lossy decode
+    bit-exact across the WHOLE 9-scan progression: the DC path runs
+    point transform + refinement for real, the AC scans are pure EOB
+    runs (every AC coefficient is zero), and non-flat AC machinery is
+    pinned by the progressive==baseline equality tests instead."""
+    w, h = jpeg_prog_dims(doc_id)
+    gray = _flat_blocks("jpegprog", doc_id, w, h, (8, 8))
+    return make_jpeg_progressive(w, h, _gray_rgb(gray))
 
 
 def _decode_jpeg_progressive(payload: bytes) -> tuple[int, int, np.ndarray]:
@@ -2868,6 +2456,7 @@ def make_png_palette(width: int, height: int, indices: bytes, palette: bytes) ->
     )
 
 
+@functools.cache
 def _png8_palette() -> bytes:
     """Deterministic 256-entry fixture palette: entry ``i`` =
     (i, 255-i, (7*i) % 256), so a decoded pixel's RGB sum is the
@@ -2878,41 +2467,12 @@ def _png8_palette() -> bytes:
     )
 
 
-def _png8_indices(doc_id: int, n: int) -> bytes:
-    """Portable per-pixel palette indices (md5-60bit family)."""
-    return bytes(
-        int(hashlib.md5(f"png8:{doc_id}:{p}".encode()).hexdigest()[:15], 16) % 256
-        for p in range(n)
-    )
-
-
-def encode_png8_media(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
-    """Palette-PNG sibling of :func:`encode_png_media` (same
-    spread-exchange Arrow-kernel shape; dims reuse png_dims so every
-    file still exercises all five scanline filters — at bpp=1)."""
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pal = _png8_palette()
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            payloads = []
-            for did in pdf[id_col]:
-                did = int(did)
-                w, h = png_dims(did)
-                payloads.append(make_png_palette(w, h, _png8_indices(did, w * h), pal))
-            yield pd.DataFrame({"doc_id": pdf[id_col], "payload": payloads})
-
-    out = spread_for_kernel(df).mapInPandas(_encode, schema="doc_id long, payload binary")
-    return out.select(
-        "doc_id",
-        "payload",
-        F.struct(
-            F.lit("image/png").alias("mime"),
-            F.octet_length("payload").alias("n_bytes"),
-            F.sha2("payload", 256).alias("sha256"),
-        ).alias("media_meta"),
-    )
+def png8_payload(doc_id: int) -> bytes:
+    """REAL palette PNG of the ``'png8'`` index fixture over
+    :func:`_png8_palette`; dims reuse :func:`png_dims`, so every file
+    still exercises all five scanline filters — at bpp=1."""
+    w, h = png_dims(doc_id)
+    return make_png_palette(w, h, bytes(fixture_values("png8", doc_id, w * h)), _png8_palette())
 
 
 # --- MP4/ISO-BMFF container metadata (real box walk; codec decode stays stubbed) ---
@@ -3131,8 +2691,9 @@ def parse_flac_meta(payload: bytes) -> tuple[int, int, int, int, int]:
 
 # --- staged codec surfaces promoted to driver keys (round 16) -------------------
 # Encoders/decoders above shipped (round-trip-exact + fuzz-clean) in
-# round 15; these wrappers give each surface its own portable fixture
-# family so the DuckDB oracle replays the decode (VERDICT r15 #1/#2).
+# round 15; these payload functions give each surface its own portable
+# fixture family so the DuckDB oracle replays the decode (VERDICT r15
+# #1/#2).
 
 
 def pngi_dims(doc_id: int) -> tuple[int, int]:
@@ -3144,85 +2705,26 @@ def pngi_dims(doc_id: int) -> tuple[int, int]:
     return 5 + doc_id % 8, 6 + doc_id % 7
 
 
-def _pngi_pixel_bytes(doc_id: int, n: int) -> bytes:
-    """Portable pixel fixture for the interlaced key (md5-60bit
-    family, its own 'pngi:' seed so the key is independent of the
-    sequential PNG key's data)."""
-    return bytes(
-        int(hashlib.md5(f"pngi:{doc_id}:{p}".encode()).hexdigest()[:15], 16) % 256
-        for p in range(n)
-    )
+def png_interlaced_payload(doc_id: int) -> bytes:
+    """REAL Adam7-interlaced PNG of the ``'pngi'`` pixel fixture (its
+    own seed, so the key is independent of the sequential PNG key's
+    data) — interlacing changes the BITSTREAM (per-pass sub-image
+    filtering, pass-order scanlines in one zlib stream), not the
+    pixels, so the decoded projection keeps the plain pixel_sum closed
+    form."""
+    w, h = pngi_dims(doc_id)
+    return make_png_interlaced(w, h, bytes(fixture_values("pngi", doc_id, w * h * 3)))
 
 
-def encode_png_interlaced_media(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
-    """Build REAL Adam7-interlaced PNG payloads per row — interlacing
-    changes the BITSTREAM (per-pass sub-image filtering, pass-order
-    scanlines in one zlib stream), not the pixels, so the decoded
-    projection keeps the plain pixel_sum closed form."""
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            payloads = []
-            for did in pdf[id_col]:
-                did = int(did)
-                w, h = pngi_dims(did)
-                payloads.append(
-                    make_png_interlaced(w, h, _pngi_pixel_bytes(did, w * h * 3))
-                )
-            yield pd.DataFrame({"doc_id": pdf[id_col], "payload": payloads})
-
-    out = spread_for_kernel(df).mapInPandas(_encode, schema="doc_id long, payload binary")
-    return out.select(
-        "doc_id",
-        "payload",
-        F.struct(
-            F.lit("image/png").alias("mime"),
-            F.octet_length("payload").alias("n_bytes"),
-            F.sha2("payload", 256).alias("sha256"),
-        ).alias("media_meta"),
-    )
-
-
-def _png_rgba_bytes(doc_id: int, n: int) -> bytes:
-    """Portable RGBA fixture: byte ``i`` (4 per pixel — R,G,B,A
-    interleaved) = md5('pngrgba:doc_id:i') % 256, so DuckDB replays
-    the straight-alpha white composite per channel with exact integer
-    rounding."""
-    return bytes(
-        int(hashlib.md5(f"pngrgba:{doc_id}:{p}".encode()).hexdigest()[:15], 16) % 256
-        for p in range(n)
-    )
-
-
-def encode_png_rgba_media(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
-    """Build REAL RGBA (color type 6) PNG payloads per row — the most
-    common web PNG layout after truecolor: four bytes per pixel,
-    filters at bpp=4, decode composites straight alpha over white with
-    exact integer rounding ((v*a + 255*(255-a) + 127) // 255)."""
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            payloads = []
-            for did in pdf[id_col]:
-                did = int(did)
-                w, h = png_dims(did)
-                payloads.append(make_png_rgba(w, h, _png_rgba_bytes(did, w * h * 4)))
-            yield pd.DataFrame({"doc_id": pdf[id_col], "payload": payloads})
-
-    out = spread_for_kernel(df).mapInPandas(_encode, schema="doc_id long, payload binary")
-    return out.select(
-        "doc_id",
-        "payload",
-        F.struct(
-            F.lit("image/png").alias("mime"),
-            F.octet_length("payload").alias("n_bytes"),
-            F.sha2("payload", 256).alias("sha256"),
-        ).alias("media_meta"),
-    )
+def png_rgba_payload(doc_id: int) -> bytes:
+    """REAL RGBA (color type 6) PNG — the most common web PNG layout
+    after truecolor: four bytes per pixel, filters at bpp=4. Byte
+    ``i`` (R,G,B,A interleaved) is the ``'pngrgba'`` fixture, so
+    DuckDB replays the decoder's straight-alpha white composite per
+    channel with exact integer rounding
+    ((v*a + 255*(255-a) + 127) // 255)."""
+    w, h = png_dims(doc_id)
+    return make_png_rgba(w, h, bytes(fixture_values("pngrgba", doc_id, w * h * 4)))
 
 
 def jpeg_gray_dims(doc_id: int) -> tuple[int, int]:
@@ -3232,47 +2734,14 @@ def jpeg_gray_dims(doc_id: int) -> tuple[int, int]:
     return 8 * (1 + doc_id % 5), 8 * (1 + doc_id % 2)
 
 
-def _jpeg_gray_block_values(doc_id: int, n_blocks: int) -> list[int]:
-    """Per-8x8-block portable gray values ('jpeggray:' seed): the flat
-    blocks + DC quant step 8 keep the single-component lossy decode
-    bit-exact (the make_jpeg argument), and the decoder's
-    replicate-to-RGB path makes each block contribute 192*v."""
-    return [
-        int(hashlib.md5(f"jpeggray:{doc_id}:{b}".encode()).hexdigest()[:15], 16) % 256
-        for b in range(n_blocks)
-    ]
-
-
-def encode_jpeg_gray_media(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
-    """Build REAL single-component (grayscale) baseline JPEG payloads
-    per row — luma tables only, 1-block MCUs, the scanned-document
-    layout; exercises the decoder's 1-component replicate-to-RGB
-    path."""
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            payloads = []
-            for did in pdf[id_col]:
-                did = int(did)
-                w, h = jpeg_gray_dims(did)
-                vals = _jpeg_gray_block_values(did, (w // 8) * (h // 8))
-                grid = np.array(vals, dtype=np.uint8).reshape(h // 8, w // 8)
-                gray = np.kron(grid, np.ones((8, 8), dtype=np.uint8))
-                payloads.append(make_jpeg_gray(w, h, gray.tobytes()))
-            yield pd.DataFrame({"doc_id": pdf[id_col], "payload": payloads})
-
-    out = spread_for_kernel(df).mapInPandas(_encode, schema="doc_id long, payload binary")
-    return out.select(
-        "doc_id",
-        "payload",
-        F.struct(
-            F.lit("image/jpeg").alias("mime"),
-            F.octet_length("payload").alias("n_bytes"),
-            F.sha2("payload", 256).alias("sha256"),
-        ).alias("media_meta"),
-    )
+def jpeg_gray_payload(doc_id: int) -> bytes:
+    """REAL single-component (grayscale) baseline JPEG — luma tables
+    only, 1-block MCUs, the scanned-document layout; exercises the
+    decoder's 1-component replicate-to-RGB path. Flat ``'jpeggray'``
+    blocks + DC quant step 8 keep the decode bit-exact, each block
+    contributing 192*v to pixel_sum."""
+    w, h = jpeg_gray_dims(doc_id)
+    return make_jpeg_gray(w, h, _flat_blocks("jpeggray", doc_id, w, h, (8, 8)).tobytes())
 
 
 def gifi_dims(doc_id: int) -> tuple[int, int]:
@@ -3283,49 +2752,14 @@ def gifi_dims(doc_id: int) -> tuple[int, int]:
     return 5 + doc_id % 5, 6 + doc_id % 6
 
 
-def _gifi_indices(doc_id: int, n: int) -> bytes:
-    """Portable index fixture for the interlaced key ('gifi:' seed)."""
-    return bytes(
-        int(hashlib.md5(f"gifi:{doc_id}:{p}".encode()).hexdigest()[:15], 16) % 256
-        for p in range(n)
-    )
-
-
-def encode_gif_interlaced_media(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
-    """Build REAL interlaced GIF payloads per row — the image
+def gif_interlaced_payload(doc_id: int) -> bytes:
+    """REAL interlaced GIF of the ``'gifi'`` index fixture — the image
     descriptor sets the interlace flag and rows are stored in the
     spec's four-pass order, so the decode must scatter them back;
     interlacing permutes storage, not values, so index_sum keeps the
     plain closed form."""
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            payloads = []
-            for did in pdf[id_col]:
-                did = int(did)
-                w, h = gifi_dims(did)
-                payloads.append(make_gif_interlaced(w, h, _gifi_indices(did, w * h)))
-            yield pd.DataFrame({"doc_id": pdf[id_col], "payload": payloads})
-
-    out = spread_for_kernel(df).mapInPandas(_encode, schema="doc_id long, payload binary")
-    return out.select(
-        "doc_id",
-        "payload",
-        F.struct(
-            F.lit("image/gif").alias("mime"),
-            F.octet_length("payload").alias("n_bytes"),
-            F.sha2("payload", 256).alias("sha256"),
-        ).alias("media_meta"),
-    )
-
-
-#: Output schema of the MP4 container-metadata walk.
-DECODED_MP4_SCHEMA = (
-    "doc_id long, brand string, duration_ms long, width int, height int, "
-    "n_video_tracks int"
-)
+    w, h = gifi_dims(doc_id)
+    return make_gif_interlaced(w, h, bytes(fixture_values("gifi", doc_id, w * h)))
 
 
 def mp4_meta_params(doc_id: int) -> dict:
@@ -3345,62 +2779,12 @@ def mp4_meta_params(doc_id: int) -> dict:
     }
 
 
-def encode_mp4_media(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
-    """Build REAL minimal ISO-BMFF containers per row (ftyp + moov
-    with v0/v1 mvhd and per-track tkhd boxes, optionally largesize-
-    wrapped, + opaque mdat)."""
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            payloads = []
-            for did in pdf[id_col]:
-                payloads.append(make_mp4_meta(**mp4_meta_params(int(did))))
-            yield pd.DataFrame({"doc_id": pdf[id_col], "payload": payloads})
-
-    out = spread_for_kernel(df).mapInPandas(_encode, schema="doc_id long, payload binary")
-    return out.select(
-        "doc_id",
-        "payload",
-        F.struct(
-            F.lit("video/mp4").alias("mime"),
-            F.octet_length("payload").alias("n_bytes"),
-            F.sha2("payload", 256).alias("sha256"),
-        ).alias("media_meta"),
-    )
-
-
-def parse_mp4_media(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
-    """Arrow-batched REAL ISO-BMFF box walk to the oracle-comparable
-    projection (brand, duration_ms, first-video-track dims, video
-    track census) — the crawl first mile for video: container
-    structure without decoding a single frame."""
-
-    def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows = [parse_mp4_meta(bytes(p)) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "brand": [r[0] for r in rows],
-                    "duration_ms": [r[1] for r in rows],
-                    "width": [r[2] for r in rows],
-                    "height": [r[3] for r in rows],
-                    "n_video_tracks": [r[4] for r in rows],
-                }
-            )
-
-    return df.mapInPandas(_parse, schema=DECODED_MP4_SCHEMA)
-
-
-#: Output schema of the FLAC STREAMINFO walk.
-DECODED_FLAC_SCHEMA = (
-    "doc_id long, sample_rate int, channels int, bits_per_sample int, "
-    "total_samples long, duration_ms long"
-)
+def mp4_payload(doc_id: int) -> bytes:
+    """REAL minimal ISO-BMFF container (ftyp + moov with v0/v1 mvhd and
+    per-track tkhd boxes, optionally largesize-wrapped, + opaque
+    mdat); the box walk (:func:`parse_mp4_meta`) is the crawl first
+    mile for video — container structure without decoding a frame."""
+    return make_mp4_meta(**mp4_meta_params(doc_id))
 
 
 def flac_meta_params(doc_id: int) -> dict:
@@ -3416,129 +2800,23 @@ def flac_meta_params(doc_id: int) -> dict:
     }
 
 
-def encode_flac_media(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
-    """Build REAL FLAC headers per row (fLaC magic, packed STREAMINFO,
-    VORBIS_COMMENT + PADDING blocks the walker must skip, opaque frame
-    bytes)."""
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            payloads = []
-            for did in pdf[id_col]:
-                payloads.append(make_flac_meta(**flac_meta_params(int(did))))
-            yield pd.DataFrame({"doc_id": pdf[id_col], "payload": payloads})
-
-    out = spread_for_kernel(df).mapInPandas(_encode, schema="doc_id long, payload binary")
-    return out.select(
-        "doc_id",
-        "payload",
-        F.struct(
-            F.lit("audio/flac").alias("mime"),
-            F.octet_length("payload").alias("n_bytes"),
-            F.sha2("payload", 256).alias("sha256"),
-        ).alias("media_meta"),
-    )
+def flac_payload(doc_id: int) -> bytes:
+    """REAL FLAC header (fLaC magic, packed STREAMINFO, VORBIS_COMMENT
+    + PADDING blocks the walker must skip, opaque frame bytes) — the
+    MP4-meta contract for audio (:func:`parse_flac_meta`)."""
+    return make_flac_meta(**flac_meta_params(doc_id))
 
 
-def parse_flac_media(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
-    """Arrow-batched REAL FLAC STREAMINFO walk to the oracle-comparable
-    projection (rate, channels, bit depth, total samples, duration) —
-    the MP4-meta contract for audio."""
-
-    def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows = [parse_flac_meta(bytes(p)) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "sample_rate": [r[0] for r in rows],
-                    "channels": [r[1] for r in rows],
-                    "bits_per_sample": [r[2] for r in rows],
-                    "total_samples": [r[3] for r in rows],
-                    "duration_ms": [r[4] for r in rows],
-                }
-            )
-
-    return df.mapInPandas(_parse, schema=DECODED_FLAC_SCHEMA)
-
-
-#: Positional projections for the INTERLACED keys: interlacing is a
-#: storage permutation, so a plain value sum cannot see a scatter bug
-#: that permutes rows/pixels — the position-weighted sum can.
-DECODED_PNG_POS_SCHEMA = (
-    "doc_id long, width int, height int, pixel_sum long, pos_weighted_sum long"
-)
-DECODED_GIF_POS_SCHEMA = (
-    "doc_id long, width int, height int, index_sum long, pos_weighted_sum long"
-)
-
-
-def decode_png_positional_media(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
-    """PNG decode to a PERMUTATION-SENSITIVE projection: pixel_sum plus
-    the position-weighted sum Σ p·v_p over the flattened top-down
-    row-major byte array — an Adam7 scatter that lands any pass on the
-    wrong grid produces a different weighted sum even when the value
-    multiset is identical."""
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            widths, heights, sums, wsums = [], [], [], []
-            for payload in pdf["payload"]:
-                w, h, pixels = decode_png(bytes(payload))
-                flat = pixels.astype(np.int64).ravel()
-                widths.append(w)
-                heights.append(h)
-                sums.append(int(flat.sum()))
-                wsums.append(int((np.arange(flat.size, dtype=np.int64) * flat).sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "width": widths,
-                    "height": heights,
-                    "pixel_sum": sums,
-                    "pos_weighted_sum": wsums,
-                }
-            )
-
-    return df.mapInPandas(_decode, schema=DECODED_PNG_POS_SCHEMA)
-
-
-def decode_gif_positional_media(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
-    """GIF decode to a PERMUTATION-SENSITIVE projection: index_sum plus
-    Σ p·v_p over the flattened top-down row-major index array — a
-    de-interlace that scatters rows to the wrong display positions
-    changes the weighted sum even though the index multiset (and so
-    the plain sum) is untouched."""
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            widths, heights, sums, wsums = [], [], [], []
-            for payload in pdf["payload"]:
-                w, h, idx = decode_gif(bytes(payload))
-                flat = idx.astype(np.int64).ravel()
-                widths.append(w)
-                heights.append(h)
-                sums.append(int(flat.sum()))
-                wsums.append(int((np.arange(flat.size, dtype=np.int64) * flat).sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "width": widths,
-                    "height": heights,
-                    "index_sum": sums,
-                    "pos_weighted_sum": wsums,
-                }
-            )
-
-    return df.mapInPandas(_decode, schema=DECODED_GIF_POS_SCHEMA)
+def _positional_sums(decode: Callable[[bytes], tuple], payload: bytes) -> tuple[int, int, int, int]:
+    """:func:`_value_sums` plus the position-weighted sum Σ p·v_p over
+    the flattened top-down row-major array — a PERMUTATION-SENSITIVE
+    projection: an Adam7 scatter that lands a pass on the wrong grid,
+    or a GIF de-interlace that scatters rows to the wrong display
+    positions, changes the weighted sum even though the value
+    multiset (and so the plain sum) is untouched."""
+    w, h, px = decode(payload)
+    flat = px.astype(np.int64).ravel()
+    return w, h, int(flat.sum()), int((np.arange(flat.size, dtype=np.int64) * flat).sum())
 
 
 def jpeg12_dims(doc_id: int) -> tuple[int, int]:
@@ -3548,48 +2826,17 @@ def jpeg12_dims(doc_id: int) -> tuple[int, int]:
     return 8 * (1 + doc_id % 4), 8 * (1 + doc_id % 3)
 
 
-def _jpeg12_block_values(doc_id: int, n_blocks: int) -> list[int]:
-    """Per-8x8-block portable 12-BIT values ('jpeg12:' seed, % 4096):
-    flat blocks + DC quant step 8 keep the 12-bit lossy decode
-    bit-exact; the decoder's high-bits reduction makes each block
-    contribute 192*(v >> 4) to the 8-bit pixel_sum."""
-    return [
-        int(hashlib.md5(f"jpeg12:{doc_id}:{b}".encode()).hexdigest()[:15], 16) % 4096
-        for b in range(n_blocks)
-    ]
-
-
-def encode_jpeg12_media(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
-    """Build REAL 12-bit extended-sequential (SOF1) JPEG payloads per
-    row — 16-bit quant table, 12-bit level shift, DC categories past
-    the 8-bit bound; the last Huffman-coded JPEG refusal, now a
-    first-class decode surface."""
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            payloads = []
-            for did in pdf[id_col]:
-                did = int(did)
-                w, h = jpeg12_dims(did)
-                vals = _jpeg12_block_values(did, (w // 8) * (h // 8))
-                grid = np.kron(
-                    np.array(vals, dtype=np.int64).reshape(h // 8, w // 8),
-                    np.ones((8, 8), dtype=np.int64),
-                )
-                payloads.append(make_jpeg12(w, h, grid))
-            yield pd.DataFrame({"doc_id": pdf[id_col], "payload": payloads})
-
-    out = spread_for_kernel(df).mapInPandas(_encode, schema="doc_id long, payload binary")
-    return out.select(
-        "doc_id",
-        "payload",
-        F.struct(
-            F.lit("image/jpeg").alias("mime"),
-            F.octet_length("payload").alias("n_bytes"),
-            F.sha2("payload", 256).alias("sha256"),
-        ).alias("media_meta"),
+def jpeg12_payload(doc_id: int) -> bytes:
+    """REAL 12-bit extended-sequential (SOF1) JPEG — 16-bit quant
+    table, 12-bit level shift, DC categories past the 8-bit bound; the
+    last Huffman-coded JPEG refusal, now a first-class decode surface.
+    The ``'jpeg12'`` fixture is flat per 8x8 block with 12-BIT values
+    (mod 4096): DC quant step 8 keeps the decode bit-exact, and the
+    decoder's high-bits reduction makes each block contribute
+    192*(v >> 4) to the 8-bit pixel_sum."""
+    w, h = jpeg12_dims(doc_id)
+    return make_jpeg12(
+        w, h, _flat_blocks("jpeg12", doc_id, w, h, (8, 8), mod=4096, dtype=np.int64)
     )
 
 
@@ -3600,57 +2847,19 @@ def jpeg411_dims(doc_id: int) -> tuple[int, int]:
     return 32 * (1 + doc_id % 2), 8 * (1 + doc_id % 4)
 
 
-def _jpeg411_mcu_values(doc_id: int, n_mcus: int) -> list[int]:
-    """Per-32x8-MCU portable gray values ('jpeg411:' seed): flat MCU
-    regions survive BOTH loss stages (the 4x1 chroma mean of a flat
-    run is exact; DC quant step 8 divides every flat block), so each
-    MCU contributes 256 pixels x 3 channels x value."""
-    return [
-        int(hashlib.md5(f"jpeg411:{doc_id}:{m}".encode()).hexdigest()[:15], 16) % 256
-        for m in range(n_mcus)
-    ]
+def jpeg411_payload(doc_id: int) -> bytes:
+    """REAL 4:1:1-subsampled JPEG — sampling factor 4, past the old
+    Hi/Vi<=2 bound: the DV/consumer-video layout, T.81's maximum
+    horizontal factor. The ``'jpeg411'`` fixture is flat per 32x8 MCU:
+    flat MCU regions survive BOTH loss stages (the 4x1 chroma mean of
+    a flat run is exact; DC quant step 8 divides every flat block), so
+    each MCU contributes 256 pixels x 3 channels x value."""
+    w, h = jpeg411_dims(doc_id)
+    gray = _flat_blocks("jpeg411", doc_id, w, h, (8, 32))
+    return make_jpeg(w, h, _gray_rgb(gray), subsampling="4:1:1")
 
 
-def encode_jpeg411_media(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
-    """Build REAL 4:1:1-subsampled JPEG payloads per row — sampling
-    factor 4, past the old Hi/Vi<=2 bound: the DV/consumer-video
-    layout, T.81's maximum horizontal factor."""
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            payloads = []
-            for did in pdf[id_col]:
-                did = int(did)
-                w, h = jpeg411_dims(did)
-                vals = _jpeg411_mcu_values(did, (w // 32) * (h // 8))
-                grid = np.array(vals, dtype=np.uint8).reshape(h // 8, w // 32)
-                gray = np.kron(grid, np.ones((8, 32), dtype=np.uint8))
-                rgb = np.repeat(gray[..., None], 3, axis=-1)
-                payloads.append(make_jpeg(w, h, rgb.tobytes(), subsampling="4:1:1"))
-            yield pd.DataFrame({"doc_id": pdf[id_col], "payload": payloads})
-
-    out = spread_for_kernel(df).mapInPandas(_encode, schema="doc_id long, payload binary")
-    return out.select(
-        "doc_id",
-        "payload",
-        F.struct(
-            F.lit("image/jpeg").alias("mime"),
-            F.octet_length("payload").alias("n_bytes"),
-            F.sha2("payload", 256).alias("sha256"),
-        ).alias("media_meta"),
-    )
-
-
-#: Output schema of the audio quality-stats projection.
-AUDIO_STATS_SCHEMA = (
-    "doc_id long, sample_rate int, n_samples int, sum_sq long, peak_abs int, "
-    "n_zero_crossings int, n_clipped int"
-)
-
-
-def audio_stats_media(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
+def wav_stats(payload: bytes) -> tuple[int, int, int, int, int, int]:
     """Per-file audio QUALITY statistics over the real WAV decode —
     the filter pass an audio-training pipeline runs before anything
     else (silence, clipping, and level screening): energy as the
@@ -3659,40 +2868,22 @@ def audio_stats_media(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
     integer), peak absolute amplitude, zero-crossing count (the
     cheapest spectral proxy; sign change = (prev<0) != (cur<0), zeros
     counted nonnegative), and samples pinned at full scale (±32767/
-    -32768 — the clipping witness). Bytes and samples stay
-    executor-side; six ints per file cross to the JVM."""
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows = {k: [] for k in (
-                "sample_rate", "n_samples", "sum_sq", "peak_abs",
-                "n_zero_crossings", "n_clipped",
-            )}
-            for payload in pdf["payload"]:
-                rate, s = decode_wav(bytes(payload))
-                s64 = s.astype(np.int64)
-                neg = s64 < 0
-                rows["sample_rate"].append(rate)
-                rows["n_samples"].append(len(s64))
-                rows["sum_sq"].append(int((s64 * s64).sum()))
-                rows["peak_abs"].append(int(np.abs(s64).max(initial=0)))
-                rows["n_zero_crossings"].append(int((neg[1:] != neg[:-1]).sum()))
-                rows["n_clipped"].append(
-                    int(((s64 == 32767) | (s64 == -32768)).sum())
-                )
-            yield pd.DataFrame({"doc_id": pdf[id_col], **rows})
-
-    return df.mapInPandas(_stats, schema=AUDIO_STATS_SCHEMA)
+    -32768 — the clipping witness). Samples stay executor-side; six
+    ints per file cross to the JVM."""
+    rate, s = decode_wav(payload)
+    s64 = s.astype(np.int64)
+    neg = s64 < 0
+    return (
+        rate,
+        len(s64),
+        int((s64 * s64).sum()),
+        int(np.abs(s64).max(initial=0)),
+        int((neg[1:] != neg[:-1]).sum()),
+        int(((s64 == 32767) | (s64 == -32768)).sum()),
+    )
 
 
 # --- EXIF (APP1/TIFF IFD) metadata — the crawl-real image metadata walk --------
-
-#: Output schema of the EXIF metadata walk.
-EXIF_META_SCHEMA = (
-    "doc_id long, byte_order string, orientation int, make string, datetime string"
-)
 
 
 def make_exif_app1(
@@ -3831,100 +3022,39 @@ def exif_params(doc_id: int) -> dict:
     }
 
 
-def encode_jpeg_exif_media(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
-    """Build REAL Exif-bearing JPEGs per row: the smallest valid
-    baseline JPEG (one flat 8x8 block) carrying an APP1 TIFF IFD in
-    alternating byte order — the payload both decode_jpeg (which must
-    SKIP the APP1) and parse_exif (which must walk it) accept."""
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        base = make_jpeg(8, 8, bytes([128]) * (8 * 8 * 3))
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            payloads = []
-            for did in pdf[id_col]:
-                payloads.append(
-                    insert_exif(base, make_exif_app1(**exif_params(int(did))))
-                )
-            yield pd.DataFrame({"doc_id": pdf[id_col], "payload": payloads})
-
-    out = spread_for_kernel(df).mapInPandas(_encode, schema="doc_id long, payload binary")
-    return out.select(
-        "doc_id",
-        "payload",
-        F.struct(
-            F.lit("image/jpeg").alias("mime"),
-            F.octet_length("payload").alias("n_bytes"),
-            F.sha2("payload", 256).alias("sha256"),
-        ).alias("media_meta"),
-    )
+@functools.cache
+def _exif_base_jpeg() -> bytes:
+    """The smallest valid baseline JPEG: one flat 8x8 block."""
+    return make_jpeg(8, 8, bytes([128]) * (8 * 8 * 3))
 
 
-def parse_exif_media(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
-    """Arrow-batched Exif walk to the oracle-comparable projection."""
-
-    def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows = [parse_exif(bytes(p)) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "byte_order": [r[0] for r in rows],
-                    "orientation": [r[1] for r in rows],
-                    "make": [r[2] for r in rows],
-                    "datetime": [r[3] for r in rows],
-                }
-            )
-
-    return df.mapInPandas(_parse, schema=EXIF_META_SCHEMA)
+def jpeg_exif_payload(doc_id: int) -> bytes:
+    """REAL Exif-bearing JPEG: the smallest valid baseline JPEG
+    carrying an APP1 TIFF IFD in alternating byte order — the payload
+    both decode_jpeg (which must SKIP the APP1) and parse_exif (which
+    must walk it) accept."""
+    return insert_exif(_exif_base_jpeg(), make_exif_app1(**exif_params(doc_id)))
 
 
-def encode_png_twin_media(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
-    """PNG payload builder for the image-dedup key: rows with
-    doc_id >= 40M are PLANTED NEAR-DUP TWINS of doc_id - 40M — the
-    SAME pixel fixture with the first byte shifted by +48 (mod 256),
-    i.e. a slightly-edited re-encode of the same picture. One changed
-    pixel moves at most the three row-0 dHash bits whose sample grid
-    touches x=0, so every twin pair sits within Hamming 3 of its
-    original BY CONSTRUCTION — inside both the operator threshold and
-    the pigeonhole band guarantee."""
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            payloads = []
-            for did in pdf[id_col]:
-                did = int(did)
-                orig = did - 40_000_000 if did >= 40_000_000 else did
-                w, h = png_dims(orig)
-                px = bytearray(_png_pixel_bytes(orig, w * h * 3))
-                if did >= 40_000_000:
-                    px[0] = (px[0] + 48) % 256
-                payloads.append(make_png(w, h, bytes(px)))
-            yield pd.DataFrame({"doc_id": pdf[id_col], "payload": payloads})
-
-    out = spread_for_kernel(df).mapInPandas(_encode, schema="doc_id long, payload binary")
-    return out.select(
-        "doc_id",
-        "payload",
-        F.struct(
-            F.lit("image/png").alias("mime"),
-            F.octet_length("payload").alias("n_bytes"),
-            F.sha2("payload", 256).alias("sha256"),
-        ).alias("media_meta"),
-    )
+def png_twin_payload(doc_id: int) -> bytes:
+    """PNG payload for the image-dedup key: doc_ids >= 40M are PLANTED
+    NEAR-DUP TWINS of doc_id - 40M — the SAME ``'png'`` pixel fixture
+    with the first byte shifted by +48 (mod 256), i.e. a slightly-
+    edited re-encode of the same picture; every other doc_id is
+    exactly :func:`png_payload`. One changed pixel moves at most the
+    three row-0 dHash bits whose sample grid touches x=0, so every
+    twin pair sits within Hamming 3 of its original BY CONSTRUCTION —
+    inside both the operator threshold and the pigeonhole band
+    guarantee."""
+    orig = doc_id - 40_000_000 if doc_id >= 40_000_000 else doc_id
+    w, h = png_dims(orig)
+    px = fixture_values("png", orig, w * h * 3)
+    if doc_id >= 40_000_000:
+        px[0] = (px[0] + 48) % 256
+    return make_png(w, h, bytes(px))
 
 
 # --- MP3 (MPEG-1 Layer III) frame-header walk — audio meta without decode ------
-
-#: Output schema of the MP3 metadata walk.
-MP3_META_SCHEMA = (
-    "doc_id long, bitrate_kbps int, sample_rate int, n_frames int, duration_ms long"
-)
 
 #: MPEG-1 Layer III bitrate table (kbps) indexed by the 4-bit header
 #: field (index 0 = "free format", 15 = forbidden) and the 2-bit
@@ -4031,48 +3161,145 @@ def mp3_meta_params(doc_id: int) -> dict:
     }
 
 
-def encode_mp3_media(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
-    """Build REAL MP3 frame sequences per row (ID3v2 tag + CBR
-    MPEG-1 Layer III headers with opaque frame bodies)."""
+def mp3_payload(doc_id: int) -> bytes:
+    """REAL MP3 frame sequence (ID3v2 tag + CBR MPEG-1 Layer III
+    headers with opaque frame bodies) for :func:`parse_mp3_meta`."""
+    return make_mp3_meta(**mp3_meta_params(doc_id))
+
+
+# --- the codec table and its two Spark paths ------------------------------------
+
+#: Image decoders behind the :func:`decode_media` stub, by mime prefix:
+#: (decoder, n_channels). GIF is palette-indexed: one channel.
+_REAL_IMAGE_DECODERS = {
+    "image/bmp": (decode_bmp, 3),
+    "image/png": (decode_png, 3),
+    "image/gif": (decode_gif, 1),
+    "image/jpeg": (decode_jpeg, 3),
+}
+
+#: codec -> (mime, doc_id -> payload bytes): one row per encoder fixture.
+ENCODERS: dict[str, tuple[str, Callable[[int], bytes]]] = {
+    "bmp": ("image/bmp", bmp_payload),
+    "wav": ("audio/wav", wav_payload),
+    "png": ("image/png", png_payload),
+    "png8": ("image/png", png8_payload),
+    "png_interlaced": ("image/png", png_interlaced_payload),
+    "png_rgba": ("image/png", png_rgba_payload),
+    "png_twin": ("image/png", png_twin_payload),
+    "gif": ("image/gif", gif_payload),
+    "gif_interlaced": ("image/gif", gif_interlaced_payload),
+    "jpeg": ("image/jpeg", jpeg_payload),
+    "jpeg420": ("image/jpeg", jpeg420_payload),
+    "jpeg411": ("image/jpeg", jpeg411_payload),
+    "jpeg_dri": ("image/jpeg", jpeg_dri_payload),
+    "jpeg_prog": ("image/jpeg", jpeg_prog_payload),
+    "jpeg_gray": ("image/jpeg", jpeg_gray_payload),
+    "jpeg12": ("image/jpeg", jpeg12_payload),
+    "jpeg_exif": ("image/jpeg", jpeg_exif_payload),
+    "mp4": ("video/mp4", mp4_payload),
+    "flac": ("audio/flac", flac_payload),
+    "mp3": ("audio/mpeg", mp3_payload),
+}
+
+_PIXEL_SUM = "doc_id long, width int, height int, pixel_sum long"
+
+#: codec -> (output schema, payload bytes -> one row after doc_id): one
+#: row per decoded projection. Schemas are flat DDL.
+DECODERS: dict[str, tuple[str, Callable[[bytes], tuple]]] = {
+    "bmp": (_PIXEL_SUM, functools.partial(_value_sums, decode_bmp)),
+    "png": (_PIXEL_SUM, functools.partial(_value_sums, decode_png)),
+    "jpeg": (_PIXEL_SUM, functools.partial(_value_sums, decode_jpeg)),
+    "gif": (
+        "doc_id long, width int, height int, index_sum long",
+        functools.partial(_value_sums, decode_gif),
+    ),
+    "png_positional": (
+        "doc_id long, width int, height int, pixel_sum long, pos_weighted_sum long",
+        functools.partial(_positional_sums, decode_png),
+    ),
+    "gif_positional": (
+        "doc_id long, width int, height int, index_sum long, pos_weighted_sum long",
+        functools.partial(_positional_sums, decode_gif),
+    ),
+    "wav": (
+        "doc_id long, sample_rate int, n_samples int, amp_sum long",
+        wav_projection,
+    ),
+    "wav_stats": (
+        "doc_id long, sample_rate int, n_samples int, sum_sq long, peak_abs int, "
+        "n_zero_crossings int, n_clipped int",
+        wav_stats,
+    ),
+    "mp4": (
+        "doc_id long, brand string, duration_ms long, width int, height int, "
+        "n_video_tracks int",
+        parse_mp4_meta,
+    ),
+    "flac": (
+        "doc_id long, sample_rate int, channels int, bits_per_sample int, "
+        "total_samples long, duration_ms long",
+        parse_flac_meta,
+    ),
+    "exif": (
+        "doc_id long, byte_order string, orientation int, make string, datetime string",
+        parse_exif,
+    ),
+    "mp3": (
+        "doc_id long, bitrate_kbps int, sample_rate int, n_frames int, duration_ms long",
+        parse_mp3_meta,
+    ),
+}
+
+
+def spread_for_kernel(df: DataFrame) -> DataFrame:
+    """Partition a compute-heavy Arrow kernel's input by COMPUTE, not
+    by input bytes. File bin-packing sizes scan partitions by BYTES
+    (maxPartitionBytes/openCostInBytes), which is right for scans and
+    wrong for per-row-expensive Python kernels: the codec keys' input
+    is a tiny id projection, so a small corpus bin-packs to ONE
+    partition and the whole encode+decode pipeline serializes onto one
+    core (measured: the JPEG key read 4.7 s single-partition vs 2.8 s
+    over 10x MORE docs on a 32-file layout — r14 witness). One
+    round-robin exchange of the id column decouples kernel parallelism
+    from storage layout; the shuffled payload is the projected input
+    (ids), which stays negligible at any corpus size."""
+    sc = df.sparkSession.sparkContext
+    return df.repartition(sc.defaultParallelism)
+
+
+def encode_codec(df: DataFrame, codec: str) -> DataFrame:
+    """(doc_id, payload, media_meta) with REAL ``codec`` payloads built
+    per row by its :data:`ENCODERS` function. The Arrow-batched kernel
+    runs after :func:`spread_for_kernel`, so bytes are born
+    executor-side and never leave as anything but the payload column;
+    the metadata struct is attached JVM-side."""
+    mime, payload = ENCODERS[codec]
 
     def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            payloads = []
-            for did in pdf[id_col]:
-                payloads.append(make_mp3_meta(**mp3_meta_params(int(did))))
-            yield pd.DataFrame({"doc_id": pdf[id_col], "payload": payloads})
+            ids = pdf["doc_id"]
+            yield pd.DataFrame({"doc_id": ids, "payload": [payload(int(d)) for d in ids]})
 
     out = spread_for_kernel(df).mapInPandas(_encode, schema="doc_id long, payload binary")
-    return out.select(
-        "doc_id",
-        "payload",
-        F.struct(
-            F.lit("audio/mpeg").alias("mime"),
-            F.octet_length("payload").alias("n_bytes"),
-            F.sha2("payload", 256).alias("sha256"),
-        ).alias("media_meta"),
-    )
+    return out.select("doc_id", "payload", _media_meta(F.col("payload"), mime))
 
 
-def parse_mp3_media(df: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
-    """Arrow-batched MP3 header walk to the oracle-comparable
-    projection."""
+def decode_codec(df: DataFrame, codec: str) -> DataFrame:
+    """(doc_id, <codec columns>) from a (doc_id, payload) frame: the
+    Arrow-batched kernel runs the ``codec`` row of :data:`DECODERS` on
+    every payload executor-side; only the projection's ints and
+    strings cross back to the JVM."""
+    schema, project = DECODERS[codec]
+    columns = [field.split()[0] for field in schema.split(",")]
 
-    def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            rows = [parse_mp3_meta(bytes(p)) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "bitrate_kbps": [r[0] for r in rows],
-                    "sample_rate": [r[1] for r in rows],
-                    "n_frames": [r[2] for r in rows],
-                    "duration_ms": [r[3] for r in rows],
-                }
-            )
+            rows = [(d, *project(bytes(p))) for d, p in zip(pdf["doc_id"], pdf["payload"])]
+            yield pd.DataFrame(rows, columns=columns)
 
-    return df.mapInPandas(_parse, schema=MP3_META_SCHEMA)
+    return df.mapInPandas(_decode, schema=schema)

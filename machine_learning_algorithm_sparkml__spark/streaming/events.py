@@ -16,8 +16,11 @@ emits each window once its watermark passes.
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
 import uuid
+from collections.abc import Callable
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -429,8 +432,6 @@ def run_streaming_window_counts_rocksdb(
     for row. The pytest witness additionally proves engagement: the
     checkpoint's state dir holds RocksDB zip snapshots containing
     sst/MANIFEST artifacts."""
-    import shutil
-
     from machine_learning_algorithm_sparkml__spark.sources.io import scratch_sink_path
 
     ckpt = scratch_sink_path(sf_dir, "rocksdb_state_ckpt")
@@ -447,6 +448,72 @@ def run_streaming_window_counts_rocksdb(
     )
 
 
+def _committed_pos(ckpt: str) -> int:
+    """The synthlog cursor a new incarnation recovers from ``ckpt``:
+    the ``{"pos": n}`` source offset of the newest COMMITTED batch (0
+    before the first commit). It is read from the checkpoint's own
+    logs, so it is cumulative across incarnations and independent of
+    how many progress updates a query retains — ``q.recentProgress``
+    keeps only ``spark.sql.streaming.numRecentProgressUpdates``
+    entries, so summing its ``numInputRows`` under-counts any
+    incarnation that outruns that window."""
+    commits = os.path.join(ckpt, "commits")
+    done = [int(f) for f in os.listdir(commits) if f.isdigit()] if os.path.isdir(commits) else []
+    if not done:
+        return 0
+    with open(os.path.join(ckpt, "offsets", str(max(done)))) as f:
+        return json.loads(f.read().splitlines()[-1])["pos"]
+
+
+def _drain_python_source(
+    spark: SparkSession,
+    transform: Callable[[DataFrame], DataFrame],
+    *,
+    ckpt: str,
+    out: str,
+    feed_rows: int,
+    rows_per_batch: int,
+    rows_per_partition: int,
+    num_state_partitions: int | None,
+    max_incarnations: int,
+) -> None:
+    """Drain the synthlog feed (``feed_rows`` rows) through
+    ``transform(feed)`` into the append parquet sink ``out``: sequential
+    ``availableNow`` incarnations over ONE durable checkpoint ``ckpt``,
+    each resuming from the RECOVERED ``{"pos"}`` cursor, until the
+    checkpointed cursor (:func:`_committed_pos`) reaches the end of the
+    feed. ``num_state_partitions`` is frozen into the query at start
+    (None inherits the session width). Bounded loop: a connector bug
+    that stalled the cursor exits with a short sink, which the oracle
+    comparison then fails."""
+    from machine_learning_algorithm_sparkml__spark.sources.pyds import register
+
+    register(spark)
+    for d in (ckpt, out):
+        shutil.rmtree(d, ignore_errors=True)
+    for _ in range(max_incarnations):
+        feed = (
+            spark.readStream.format("synthlog")
+            .option("rowsPerBatch", str(rows_per_batch))
+            .option("maxRows", str(feed_rows))
+            .option("rowsPerPartition", str(rows_per_partition))
+            .load()
+        )
+        with frozen_shuffle_partitions(spark, num_state_partitions):
+            q = (
+                transform(feed)
+                .writeStream.outputMode("append")
+                .format("parquet")
+                .option("path", out)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+        q.awaitTermination()
+        if _committed_pos(ckpt) >= feed_rows:
+            break
+
+
 def run_streaming_python_source(
     spark: SparkSession,
     sf_dir: str,
@@ -459,53 +526,29 @@ def run_streaming_python_source(
     """Custom STREAMING source via the Python Data Source API
     (sources/pyds.py:_SynthLogStreamReader): an offset-managed feed
     whose ``{"pos": n}`` cursor Spark checkpoints per committed
-    micro-batch. The drive runs sequential ``availableNow``
-    incarnations over ONE durable checkpoint + append parquet sink
-    until the feed is drained — each incarnation resumes from the
-    RECOVERED offset, so the final sink holding every feed row
-    exactly once (no gaps, no double-delivery across process death)
-    is precisely the offset-recovery guarantee a production
-    connector must provide. ``readBetweenOffsets`` covers the
-    planned-but-uncommitted replay path; the feed is a pure function
-    of the row id, so a replay is bit-identical. Bounded incarnation
-    loop: a connector bug that stalled the cursor would exit with a
-    short sink, which the oracle comparison then fails."""
-    import shutil
-
+    micro-batch. The drive (:func:`_drain_python_source`) runs
+    sequential ``availableNow`` incarnations over ONE durable
+    checkpoint + append parquet sink until the feed is drained — each
+    incarnation resumes from the RECOVERED offset, so the final sink
+    holding every feed row exactly once (no gaps, no double-delivery
+    across process death) is precisely the offset-recovery guarantee a
+    production connector must provide. ``readBetweenOffsets`` covers
+    the planned-but-uncommitted replay path; the feed is a pure
+    function of the row id, so a replay is bit-identical."""
     from machine_learning_algorithm_sparkml__spark.sources.io import scratch_sink_path
-    from machine_learning_algorithm_sparkml__spark.sources.pyds import register
 
-    register(spark)
-    ckpt = scratch_sink_path(sf_dir, "pysrc_ckpt")
     out = scratch_sink_path(sf_dir, "pysrc_out")
-    for d in (ckpt, out):
-        shutil.rmtree(d, ignore_errors=True)
-
-    rows_seen = 0
-    for _ in range(max_incarnations):
-        feed = (
-            spark.readStream.format("synthlog")
-            .option("rowsPerBatch", str(rows_per_batch))
-            .option("maxRows", str(max_rows))
-            .option("rowsPerPartition", str(rows_per_partition))
-            .load()
-        )
-        q = (
-            feed.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # drain detection from the query's own committed-input-rows
-        # counters, exactly like the windowed/static-join siblings —
-        # the r16 per-incarnation sink re-read + count was an extra
-        # file-listing job per incarnation measuring the same thing
-        rows_seen += sum(int(p["numInputRows"]) for p in q.recentProgress)
-        if rows_seen >= max_rows:
-            break
+    _drain_python_source(
+        spark,
+        lambda feed: feed,
+        ckpt=scratch_sink_path(sf_dir, "pysrc_ckpt"),
+        out=out,
+        feed_rows=max_rows,
+        rows_per_batch=rows_per_batch,
+        rows_per_partition=rows_per_partition,
+        num_state_partitions=None,
+        max_incarnations=max_incarnations,
+    )
     return spark.read.parquet(out).select("id", "part", "value", "category")
 
 
@@ -540,9 +583,9 @@ def run_streaming_python_source_windowed(
     decimal(18,3) (exact, order-independent — the module's FP rule),
     so the oracle replays the whole pipeline from a generate_series:
     finalized windows = aggregate restricted to window_end <=
-    max(real ts) - watermark delay. Drain detection reads the query's
-    own progress counters (committed input rows), not the sink: the
-    sink holds windows, not rows.
+    max(real ts) - watermark delay. Drain detection reads the
+    checkpointed source cursor, not the sink: the sink holds windows,
+    not rows.
 
     The last feed row is a PUNCTUATION (heartbeat) event — the kafka
     heartbeat-topic pattern: append-mode emission LAGS the watermark
@@ -559,29 +602,9 @@ def run_streaming_python_source_windowed(
     heartbeat leaves no trace in the sink and the oracle needs no
     carve-out. At 100 TB this is exactly why idle kafka partitions
     get heartbeats: watermarks only move when data does."""
-    import shutil
-
     from machine_learning_algorithm_sparkml__spark.sources.io import scratch_sink_path
-    from machine_learning_algorithm_sparkml__spark.sources.pyds import register
 
-    register(spark)
-    ckpt = scratch_sink_path(sf_dir, "pysrc_win_ckpt")
-    out = scratch_sink_path(sf_dir, "pysrc_win_out")
-    for d in (ckpt, out):
-        shutil.rmtree(d, ignore_errors=True)
-
-    # one extra row past the real corpus: the watermark-advancing
-    # punctuation batch (see docstring)
-    feed_rows = max_rows + 1
-    rows_seen = 0
-    for _ in range(max_incarnations):
-        feed = (
-            spark.readStream.format("synthlog")
-            .option("rowsPerBatch", str(rows_per_batch))
-            .option("maxRows", str(feed_rows))
-            .option("rowsPerPartition", str(rows_per_partition))
-            .load()
-        )
+    def _windowed(feed: DataFrame) -> DataFrame:
         events = feed.select(
             F.expr(
                 f"timestampadd(SECOND, id * {seconds_per_id}, "
@@ -590,7 +613,7 @@ def run_streaming_python_source_windowed(
             "category",
             F.col("value").cast("decimal(18,3)").alias("value"),
         )
-        agg = (
+        return (
             events.withWatermark("ts", watermark)
             .groupBy(F.window("ts", window_duration).alias("win"), "category")
             .agg(
@@ -605,19 +628,21 @@ def run_streaming_python_source_windowed(
                 "sum_value",
             )
         )
-        with frozen_shuffle_partitions(spark, num_state_partitions):
-            q = (
-                agg.writeStream.outputMode("append")
-                .format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-        q.awaitTermination()
-        rows_seen += sum(int(p["numInputRows"]) for p in q.recentProgress)
-        if rows_seen >= feed_rows:
-            break
+
+    out = scratch_sink_path(sf_dir, "pysrc_win_out")
+    _drain_python_source(
+        spark,
+        _windowed,
+        ckpt=scratch_sink_path(sf_dir, "pysrc_win_ckpt"),
+        out=out,
+        # one extra row past the real corpus: the watermark-advancing
+        # punctuation batch (see docstring)
+        feed_rows=max_rows + 1,
+        rows_per_batch=rows_per_batch,
+        rows_per_partition=rows_per_partition,
+        num_state_partitions=num_state_partitions,
+        max_incarnations=max_incarnations,
+    )
     # output boundary: the checkpoint/state/sink all accumulate exact
     # decimal(38,3), but the RETURNED frame emits integer milli-units
     # — Decimal objects serialize differently per engine on hash
@@ -657,49 +682,30 @@ def run_streaming_python_source_static_join(
     needed: a stateless join emits in the batch that reads the row;
     nothing waits on a watermark. At 100 TB this is the canonical
     kafka -> broadcast-dim -> object-store enrichment hop."""
-    import shutil
-
     from machine_learning_algorithm_sparkml__spark.sources.io import (
         load_table,
         scratch_sink_path,
     )
-    from machine_learning_algorithm_sparkml__spark.sources.pyds import register
-
-    register(spark)
-    ckpt = scratch_sink_path(sf_dir, "pysrc_sj_ckpt")
-    out = scratch_sink_path(sf_dir, "pysrc_sj_out")
-    for d in (ckpt, out):
-        shutil.rmtree(d, ignore_errors=True)
 
     dim = load_table(spark, sf_dir, "region").select(
         F.col("r_regionkey").cast("bigint").alias("rk"), "r_name"
     )
-    rows_seen = 0
-    for _ in range(max_incarnations):
-        feed = (
-            spark.readStream.format("synthlog")
-            .option("rowsPerBatch", str(rows_per_batch))
-            .option("maxRows", str(max_rows))
-            .option("rowsPerPartition", str(rows_per_partition))
-            .load()
-        )
-        enriched = (
+    out = scratch_sink_path(sf_dir, "pysrc_sj_out")
+    _drain_python_source(
+        spark,
+        lambda feed: (
             feed.withColumn("rk", F.col("id") % 5)
             .join(F.broadcast(dim), "rk")
             .select("id", "part", "value", "category", "r_name")
-        )
-        q = (
-            enriched.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        rows_seen += sum(int(p["numInputRows"]) for p in q.recentProgress)
-        if rows_seen >= max_rows:
-            break
+        ),
+        ckpt=scratch_sink_path(sf_dir, "pysrc_sj_ckpt"),
+        out=out,
+        feed_rows=max_rows,
+        rows_per_batch=rows_per_batch,
+        rows_per_partition=rows_per_partition,
+        num_state_partitions=None,
+        max_incarnations=max_incarnations,
+    )
     return spark.read.parquet(out).select(
         "id", "part", "value", "category", "r_name"
     )
@@ -778,8 +784,6 @@ def run_streaming_state_reader(
     difference between "attach a debugger to a 3 TB state store" and
     a SQL query: state rows come back per-partition (partition_id
     column) so hot-key skew is one GROUP BY away."""
-    import shutil
-
     from machine_learning_algorithm_sparkml__spark.sources import load_table
     from machine_learning_algorithm_sparkml__spark.sources.io import scratch_sink_path
 
@@ -856,8 +860,6 @@ def run_streaming_state_changefeed(
     ``streaming_state_reader``. Cited shape: the reference has no
     streaming at all (SURVEY §2.10); this extends the engine's
     checkpoint-recovery family with the state-evolution audit."""
-    import shutil
-
     from machine_learning_algorithm_sparkml__spark.sources import load_table
     from machine_learning_algorithm_sparkml__spark.sources.io import scratch_sink_path
 
@@ -1032,8 +1034,6 @@ def _two_phase_windowed_restart(
     provider / changelog-checkpointing pair) are scoped around each
     incarnation's START only — like the partition count, they are
     frozen into the query and must not leak into the session."""
-    import shutil
-
     from machine_learning_algorithm_sparkml__spark.sources import load_table
     from machine_learning_algorithm_sparkml__spark.sources.io import scratch_sink_path
 
@@ -1155,8 +1155,6 @@ def run_streaming_foreach_batch_upsert(
     ``availableNow``), so the merge path executes across several real
     batches, not one. Returns the final state: one row per user —
     SQL-replayable as a per-user window argmax + count."""
-    import shutil
-
     from machine_learning_algorithm_sparkml__spark.sources import load_table
     from machine_learning_algorithm_sparkml__spark.sources.io import scratch_sink_path
     from pyspark.sql import Window

@@ -44,7 +44,9 @@ from machine_learning_algorithm_sparkml__spark.operators.dedup import (
 )
 from machine_learning_algorithm_sparkml__spark.operators.multimodal import (
     attach_binary_payload,
+    decode_codec,
     decode_media,
+    encode_codec,
     extract_features,
 )
 from machine_learning_algorithm_sparkml__spark.operators.simsearch import (
@@ -1312,6 +1314,14 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     return decode_media(wrapped)
 
 
+def _codec_roundtrip(spark: SparkSession, sf_dir: str, encoder: str, decoder: str) -> DataFrame:
+    """One codec key: every document id becomes a REAL ``encoder``
+    payload (operators/multimodal.py:ENCODERS), decoded back to the
+    ``decoder`` projection (DECODERS) that the key's oracle replays."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
+    return decode_codec(encode_codec(docs, encoder), decoder)
+
+
 def q_multimodal_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORACLE-BACKED REAL image decode (VERDICT r12 #4): every document
     row becomes a REAL 24-bit uncompressed BMP (header + bottom-up
@@ -1325,13 +1335,7 @@ def q_multimodal_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     (wrong stride, unflipped rows, padding counted into the sum) is a
     value mismatch, not a silent pass. Widths 5-8 sweep all four BMP
     row-padding classes."""
-    from machine_learning_algorithm_sparkml__spark.operators.multimodal import (
-        decode_bmp_media,
-        encode_bmp_media,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return decode_bmp_media(encode_bmp_media(docs))
+    return _codec_roundtrip(spark, sf_dir, "bmp", "bmp")
 
 
 def q_multimodal_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1345,13 +1349,7 @@ def q_multimodal_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     portable-md5 fixture, so DuckDB regenerates the signal the decoder
     must recover; a chunk-walk bug (pad byte missed, comment bytes
     read as samples) is a value mismatch."""
-    from machine_learning_algorithm_sparkml__spark.operators.multimodal import (
-        decode_wav_media,
-        encode_wav_media,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return decode_wav_media(encode_wav_media(docs))
+    return _codec_roundtrip(spark, sf_dir, "wav", "wav")
 
 
 def q_multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1368,13 +1366,7 @@ def q_multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes the decoder must recover through compression + filtering.
     Closes most of the r12 "compressed codecs env-blocked" caveat:
     PNG's codec (DEFLATE) ships in the Python standard library."""
-    from machine_learning_algorithm_sparkml__spark.operators.multimodal import (
-        decode_png_media,
-        encode_png_media,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return decode_png_media(encode_png_media(docs))
+    return _codec_roundtrip(spark, sf_dir, "png", "png")
 
 
 def q_multimodal_png8_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1389,13 +1381,7 @@ def q_multimodal_png8_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     materializing the table; indices are the portable-md5 family.
     Same decoder entry point (decode_png dispatches on the declared
     color type), same spread-exchange two-kernel plan shape."""
-    from machine_learning_algorithm_sparkml__spark.operators.multimodal import (
-        decode_png_media,
-        encode_png8_media,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return decode_png_media(encode_png8_media(docs))
+    return _codec_roundtrip(spark, sf_dir, "png8", "png")
 
 
 def q_multimodal_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1412,13 +1398,7 @@ def q_multimodal_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth, so a shared encoder/decoder bit-order bug cannot hide in
     the round-trip. Indices are the portable-md5 family; DuckDB
     regenerates the array the decoder must recover through real LZW."""
-    from machine_learning_algorithm_sparkml__spark.operators.multimodal import (
-        decode_gif_media,
-        encode_gif_media,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return decode_gif_media(encode_gif_media(docs))
+    return _codec_roundtrip(spark, sf_dir, "gif", "gif")
 
 
 def q_multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1441,13 +1421,7 @@ def q_multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     negative differentials, per-component predictors, EOB on every
     block. Non-flat content is covered by pytest's tolerance
     round-trip (quantization-bounded error)."""
-    from machine_learning_algorithm_sparkml__spark.operators.multimodal import (
-        decode_jpeg_media,
-        encode_jpeg_media,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return decode_jpeg_media(encode_jpeg_media(docs))
+    return _codec_roundtrip(spark, sf_dir, "jpeg", "jpeg")
 
 
 def q_multimodal_jpeg_dri_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1463,14 +1437,8 @@ def q_multimodal_jpeg_dri_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     differential-DC chain is re-anchored mid-scan — a decoder that
     fails to reset predictors or realign produces wrong pixels or a
     marker desync, not a tolerance miss
-    (operators/multimodal.py:encode_jpeg_dri_media, decode_jpeg)."""
-    from machine_learning_algorithm_sparkml__spark.operators.multimodal import (
-        decode_jpeg_media,
-        encode_jpeg_dri_media,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return decode_jpeg_media(encode_jpeg_dri_media(docs))
+    (operators/multimodal.py:jpeg_dri_payload, decode_jpeg)."""
+    return _codec_roundtrip(spark, sf_dir, "jpeg_dri", "jpeg")
 
 
 def q_multimodal_jpeg_progressive_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1489,13 +1457,7 @@ def q_multimodal_jpeg_progressive_decode(spark: SparkSession, sf_dir: str) -> Da
     pinned by progressive==baseline bit-equality tests on random,
     sparse, gradient, and checkerboard content. DuckDB replays
     pixel_sum by regenerating per-block values."""
-    from machine_learning_algorithm_sparkml__spark.operators.multimodal import (
-        decode_jpeg_media,
-        encode_jpeg_prog_media,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return decode_jpeg_media(encode_jpeg_prog_media(docs))
+    return _codec_roundtrip(spark, sf_dir, "jpeg_prog", "jpeg")
 
 
 def q_multimodal_jpeg420_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1511,13 +1473,7 @@ def q_multimodal_jpeg420_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     regenerating per-macroblock values (256 pixels x 3 channels x v
     each). decode_jpeg dispatches on the declared sampling factors;
     same decoder, no fixture-specific path."""
-    from machine_learning_algorithm_sparkml__spark.operators.multimodal import (
-        decode_jpeg_media,
-        encode_jpeg420_media,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return decode_jpeg_media(encode_jpeg420_media(docs))
+    return _codec_roundtrip(spark, sf_dir, "jpeg420", "jpeg")
 
 
 def q_multimodal_png_interlaced_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1533,13 +1489,7 @@ def q_multimodal_png_interlaced_decode(spark: SparkSession, sf_dir: str) -> Data
     bug cannot leave unchanged
     (operators/multimodal.py:make_png_interlaced, decode_png —
     dispatch on the IHDR interlace flag, no new plumbing)."""
-    from machine_learning_algorithm_sparkml__spark.operators.multimodal import (
-        decode_png_positional_media,
-        encode_png_interlaced_media,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return decode_png_positional_media(encode_png_interlaced_media(docs))
+    return _codec_roundtrip(spark, sf_dir, "png_interlaced", "png_positional")
 
 
 def q_multimodal_png_rgba_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1550,13 +1500,7 @@ def q_multimodal_png_rgba_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     (v*a + 255*(255-a) + 127) // 255 — so DuckDB replays pixel_sum
     from the 'pngrgba:' portable byte fixture with no tolerance
     (operators/multimodal.py:make_png_rgba, decode_png)."""
-    from machine_learning_algorithm_sparkml__spark.operators.multimodal import (
-        decode_png_media,
-        encode_png_rgba_media,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return decode_png_media(encode_png_rgba_media(docs))
+    return _codec_roundtrip(spark, sf_dir, "png_rgba", "png")
 
 
 def q_multimodal_jpeg_gray_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1568,13 +1512,7 @@ def q_multimodal_jpeg_gray_decode(spark: SparkSession, sf_dir: str) -> DataFrame
     decode bit-exact (the multimodal_jpeg_decode argument), each block
     contributing 192*v to pixel_sum
     (operators/multimodal.py:make_jpeg_gray, decode_jpeg)."""
-    from machine_learning_algorithm_sparkml__spark.operators.multimodal import (
-        decode_jpeg_media,
-        encode_jpeg_gray_media,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return decode_jpeg_media(encode_jpeg_gray_media(docs))
+    return _codec_roundtrip(spark, sf_dir, "jpeg_gray", "jpeg")
 
 
 def q_multimodal_jpeg12_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1591,13 +1529,7 @@ def q_multimodal_jpeg12_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/multimodal.py:make_jpeg12, decode_jpeg). Remaining
     refusals after this key: arithmetic-coded and sampling>2 JPEG
     only."""
-    from machine_learning_algorithm_sparkml__spark.operators.multimodal import (
-        decode_jpeg_media,
-        encode_jpeg12_media,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return decode_jpeg_media(encode_jpeg12_media(docs))
+    return _codec_roundtrip(spark, sf_dir, "jpeg12", "jpeg")
 
 
 def q_multimodal_jpeg411_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1611,13 +1543,7 @@ def q_multimodal_jpeg411_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     factor mix (fractional resampling) and out-of-range factors still
     refuse (operators/multimodal.py:make_jpeg subsampling='4:1:1',
     decode_jpeg). Remaining JPEG refusal: arithmetic coding only."""
-    from machine_learning_algorithm_sparkml__spark.operators.multimodal import (
-        decode_jpeg_media,
-        encode_jpeg411_media,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return decode_jpeg_media(encode_jpeg411_media(docs))
+    return _codec_roundtrip(spark, sf_dir, "jpeg411", "jpeg")
 
 
 def q_multimodal_gif_interlaced_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1630,13 +1556,7 @@ def q_multimodal_gif_interlaced_decode(spark: SparkSession, sf_dir: str) -> Data
     sum Σ p·v_p, which a wrong-row scatter cannot leave unchanged
     (operators/multimodal.py:make_gif_interlaced, decode_gif —
     dispatch on the image-descriptor interlace bit)."""
-    from machine_learning_algorithm_sparkml__spark.operators.multimodal import (
-        decode_gif_positional_media,
-        encode_gif_interlaced_media,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return decode_gif_positional_media(encode_gif_interlaced_media(docs))
+    return _codec_roundtrip(spark, sf_dir, "gif_interlaced", "gif_positional")
 
 
 def q_multimodal_mp4_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1651,13 +1571,7 @@ def q_multimodal_mp4_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     tuple (the text_html_extract pattern). Sample decode stays
     honestly stubbed — the container walk is the pipeline-usable part
     (operators/multimodal.py:make_mp4_meta, parse_mp4_meta)."""
-    from machine_learning_algorithm_sparkml__spark.operators.multimodal import (
-        encode_mp4_media,
-        parse_mp4_media,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return parse_mp4_media(encode_mp4_media(docs))
+    return _codec_roundtrip(spark, sf_dir, "mp4", "mp4")
 
 
 def q_multimodal_flac_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1670,13 +1584,7 @@ def q_multimodal_flac_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     five common rates, the full 1-8 channel range, and 8-24 bit
     depths; subframe decode stays honestly stubbed
     (operators/multimodal.py:make_flac_meta, parse_flac_meta)."""
-    from machine_learning_algorithm_sparkml__spark.operators.multimodal import (
-        encode_flac_media,
-        parse_flac_media,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return parse_flac_media(encode_flac_media(docs))
+    return _codec_roundtrip(spark, sf_dir, "flac", "flac")
 
 
 def q_multimodal_wav_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1687,14 +1595,8 @@ def q_multimodal_wav_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample count, all replayed by DuckDB from the portable 'wav:'
     sample fixture (crossings via a lag window; every cell integer —
     RMS's sqrt stays out of the comparable projection)
-    (operators/multimodal.py:audio_stats_media, decode_wav)."""
-    from machine_learning_algorithm_sparkml__spark.operators.multimodal import (
-        audio_stats_media,
-        encode_wav_media,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return audio_stats_media(encode_wav_media(docs))
+    (operators/multimodal.py:wav_stats, decode_wav)."""
+    return _codec_roundtrip(spark, sf_dir, "wav", "wav_stats")
 
 
 def q_multimodal_exif_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1708,13 +1610,7 @@ def q_multimodal_exif_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     serve both paths). Fixture fields are closed-form doc_id residues
     so the oracle states the expected tuple
     (operators/multimodal.py:make_exif_app1, parse_exif)."""
-    from machine_learning_algorithm_sparkml__spark.operators.multimodal import (
-        encode_jpeg_exif_media,
-        parse_exif_media,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return parse_exif_media(encode_jpeg_exif_media(docs))
+    return _codec_roundtrip(spark, sf_dir, "jpeg_exif", "exif")
 
 
 def q_multimodal_mp3_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1730,13 +1626,7 @@ def q_multimodal_mp3_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     tag sizes; VBR streams refuse explicitly (Xing support would be
     needed — never guessed)
     (operators/multimodal.py:make_mp3_meta, parse_mp3_meta)."""
-    from machine_learning_algorithm_sparkml__spark.operators.multimodal import (
-        encode_mp3_media,
-        parse_mp3_media,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return parse_mp3_media(encode_mp3_media(docs))
+    return _codec_roundtrip(spark, sf_dir, "mp3", "mp3")
 
 
 def q_multimodal_dhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1753,21 +1643,17 @@ def q_multimodal_dhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-pairs Hamming over the regenerated fixture — candidate
     generation needs no replay (the dedup_simhash rule)
     (operators/imagededup.py, operators/multimodal.py:
-    encode_png_twin_media)."""
+    png_twin_payload)."""
     from machine_learning_algorithm_sparkml__spark.operators.imagededup import (
         dhash_near_dup_pairs,
         image_dhash,
     )
-    from machine_learning_algorithm_sparkml__spark.operators.multimodal import (
-        encode_png_twin_media,
-    )
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     twins = docs.filter(F.col("doc_id") % 37 == 0).select(
         (F.col("doc_id") + F.lit(40_000_000)).alias("doc_id")
     )
     corpus = docs.unionAll(twins)
-    return dhash_near_dup_pairs(image_dhash(encode_png_twin_media(corpus)))
+    return dhash_near_dup_pairs(image_dhash(encode_codec(corpus, "png_twin")))
 
 
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:

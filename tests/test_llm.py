@@ -351,6 +351,76 @@ def test_multimodal_decode_refuses_real_media(spark):
             decode_media(wrapped).collect()
 
 
+#: sha256 over the payloads of doc_ids 0-39 (png_twin: also
+#: 40_000_000-40_000_039), taken from the per-codec encoders before
+#: they became ENCODERS rows. The DuckDB oracles check only decoded
+#: values; this pins the bytes themselves.
+ENCODER_DIGESTS = {
+    "bmp": "77bf7f72a38948ac9aff30d646c4cb3101e20c5f26049f162b0335d657cfec96",
+    "wav": "798f028dec8f18dbac0ade441a84ff85fea56b937f7ef816b4976971cc1f1487",
+    "png": "7802a55578111805cffdfb95e729b0401f001aa6a9584bfe24730255bb1c649a",
+    "png8": "e6a9ad66addf56c60a554eeeb9c2bc0e830490a685ca3af1539cdfee6773eee4",
+    "png_interlaced": "96987fcc43d968bc77dd5f235ecad494ab029c471fee516a46a50f93784d7369",
+    "png_rgba": "672abed87e31ed452859d0846d9c6fbf6b026dff84bc7547be60e5f2f5af68f4",
+    "png_twin": "8d833c13bfb03f9c313acc11a98786567b2b2f8b5e5d6e439200392415644659",
+    "gif": "64daeac8588358dcd6ec3c06a978577441b7d88937fe75503d5688050e679503",
+    "gif_interlaced": "88f2d0ec75b80c8be67d0d964783f350f4ee83ae5550743d37f607b06524f86e",
+    "jpeg": "84f925b948d9c6f069cc349ba3c9ae5d4043ddca988af3dfaf9ec65393388e1e",
+    "jpeg420": "2a39d46bcae2cdf87be3cc4611cc479225d3112779286f2c927b268ff55bb8b7",
+    "jpeg411": "f02f14cc882410c8acccc7d7bd037282bdb4d85d00b3b7f36e5fb98f96cfa9c8",
+    "jpeg_dri": "01c320f123ba24fc7dbf3ad66f959567c9092e7bfc8f16e7a0acb425d9b22915",
+    "jpeg_prog": "ea4f1e7d2f9df1ed8dd303caab749b297b72e7b71eaaacd57b823a310e880921",
+    "jpeg_gray": "4fd5d8324baa980cade899d9c6fe89fa7e8a7759211f09149e8bd911b78b3ece",
+    "jpeg12": "9a607c2efc1d05015cb6da66290e1c711b19b212cb9248f1c43060c561e8a9fd",
+    "jpeg_exif": "20bda5a3ed9766fde7081ee077b4c9e1ecb16b693f1a59d475f33f55dbc93dba",
+    "mp4": "01c21eeefa6a659c59ce065c6ced55080101e38b6f602a4cb945f4ee1ee9e354",
+    "flac": "5e7e949a39b364b39ad0a600f2058b85bccead1d2d573321965120d2735bc0c9",
+    "mp3": "14d1534e99a63bc8f5df6b399b122242564ceeb2b62ede9de0b55fbc743b632d",
+}
+
+
+def test_encoder_payload_digests_are_pinned():
+    """Every ENCODERS row produces exactly the pinned payload bytes —
+    a fixture tag, modulus, dims or kernel drift fails here even when
+    the decoded sums would still agree with a drifted oracle."""
+    import hashlib
+
+    from machine_learning_algorithm_sparkml__spark.operators.multimodal import ENCODERS
+
+    assert sorted(ENCODERS) == sorted(ENCODER_DIGESTS)
+    for codec, (_mime, payload) in ENCODERS.items():
+        ids = list(range(40))
+        if codec == "png_twin":
+            ids += range(40_000_000, 40_000_040)
+        digest = hashlib.sha256(b"".join(payload(i) for i in ids)).hexdigest()
+        assert digest == ENCODER_DIGESTS[codec], codec
+
+
+def test_codec_paths_on_empty_input(spark):
+    """Both Spark paths return zero rows, with the table's schema, for a
+    zero-row input. Schemas are checked for every row of both tables;
+    one run per path shows the kernels skip the empty input."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    from machine_learning_algorithm_sparkml__spark.operators.multimodal import (
+        DECODERS,
+        ENCODERS,
+        decode_codec,
+        encode_codec,
+    )
+
+    empty = spark.createDataFrame([], "doc_id long")
+    encoded = {codec: encode_codec(empty, codec) for codec in ENCODERS}
+    for out in encoded.values():
+        assert out.columns == ["doc_id", "payload", "media_meta"]
+    payloads = spark.createDataFrame([], "doc_id long, payload binary")
+    decoded = {codec: decode_codec(payloads, codec) for codec in DECODERS}
+    for codec, (schema, _project) in DECODERS.items():
+        assert decoded[codec].schema == _parse_datatype_string(schema), codec
+    assert encoded["jpeg"].collect() == []
+    assert decoded["jpeg"].collect() == []
+
+
 def test_bmp_roundtrip_all_padding_classes():
     """make_bmp -> decode_bmp is the identity on the logical pixel
     array for every row-padding class (w=5..8 gives pad 1,2,3,0) and
@@ -408,26 +478,26 @@ def test_decode_media_really_decodes_bmp(spark):
     reported dims come from the file header, not the sha stub."""
     from machine_learning_algorithm_sparkml__spark.operators.multimodal import (
         bmp_dims,
-        decode_bmp_media,
-        encode_bmp_media,
+        decode_codec,
+        encode_codec,
     )
 
     docs = spark.range(20).withColumnRenamed("id", "doc_id")
-    encoded = encode_bmp_media(docs)
+    encoded = encode_codec(docs, "bmp")
     rows = decode_media(encoded).collect()
     assert len(rows) == 20
     for r in rows:
         assert (r.width, r.height) == bmp_dims(r.doc_id)
         assert r.n_channels == 3
     # the projection kernel agrees with an in-process decode
-    proj = {r.doc_id: r for r in decode_bmp_media(encoded).collect()}
+    proj = {r.doc_id: r for r in decode_codec(encoded, "bmp").collect()}
     from machine_learning_algorithm_sparkml__spark.operators.multimodal import (
-        _bmp_pixel_bytes,
+        fixture_values,
     )
 
     for did in (0, 7, 13):
         w, h = bmp_dims(did)
-        assert proj[did].pixel_sum == sum(_bmp_pixel_bytes(did, w * h * 3))
+        assert proj[did].pixel_sum == sum(fixture_values("bmp", did, w * h * 3))
 
 
 def test_wav_roundtrip_chunk_walk_and_refusals():
@@ -474,20 +544,20 @@ def test_wav_roundtrip_chunk_walk_and_refusals():
 def test_wav_decode_media_projection(spark):
     """The Spark kernels agree with an in-process encode/decode."""
     from machine_learning_algorithm_sparkml__spark.operators.multimodal import (
-        _wav_samples,
-        decode_wav_media,
-        encode_wav_media,
+        decode_codec,
+        encode_codec,
+        fixture_values,
         wav_params,
     )
 
     docs = spark.range(17).withColumnRenamed("id", "doc_id")
-    proj = {r.doc_id: r for r in decode_wav_media(encode_wav_media(docs)).collect()}
+    proj = {r.doc_id: r for r in decode_codec(encode_codec(docs, "wav"), "wav").collect()}
     assert len(proj) == 17
     for did in (0, 3, 16):
         rate, n = wav_params(did)
         r = proj[did]
         assert (r.sample_rate, r.n_samples) == (rate, n)
-        assert r.amp_sum == int(_wav_samples(did, n).astype("int64").sum())
+        assert r.amp_sum == sum(v - 32768 for v in fixture_values("wav", did, n, 65536))
 
 
 def test_png_roundtrip_every_filter_type():
@@ -619,23 +689,23 @@ def test_png_decode_media_projection(spark):
     Spark projection kernel agrees with an in-process decode of the
     portable fixture."""
     from machine_learning_algorithm_sparkml__spark.operators.multimodal import (
-        _png_pixel_bytes,
-        decode_png_media,
-        encode_png_media,
+        decode_codec,
+        encode_codec,
+        fixture_values,
         png_dims,
     )
 
     docs = spark.range(20).withColumnRenamed("id", "doc_id")
-    encoded = encode_png_media(docs)
+    encoded = encode_codec(docs, "png")
     rows = decode_media(encoded).collect()
     assert len(rows) == 20
     for r in rows:
         assert (r.width, r.height) == png_dims(r.doc_id)
         assert r.n_channels == 3
-    proj = {r.doc_id: r for r in decode_png_media(encoded).collect()}
+    proj = {r.doc_id: r for r in decode_codec(encoded, "png").collect()}
     for did in (0, 7, 13, 19):
         w, h = png_dims(did)
-        assert proj[did].pixel_sum == sum(_png_pixel_bytes(did, w * h * 3))
+        assert proj[did].pixel_sum == sum(fixture_values("png", did, w * h * 3))
 
 
 def test_png_palette_roundtrip_and_refusals(spark):
@@ -647,18 +717,18 @@ def test_png_palette_roundtrip_and_refusals(spark):
     import pytest
 
     from machine_learning_algorithm_sparkml__spark.operators.multimodal import (
-        _png8_indices,
         _png8_palette,
+        decode_codec,
         decode_png,
-        decode_png_media,
-        encode_png8_media,
+        encode_codec,
+        fixture_values,
         make_png_palette,
         png_dims,
     )
 
     pal = _png8_palette()
     w, h = 5, 7  # height >= 5: all five filters exercised at bpp=1
-    idx = _png8_indices(3, w * h)
+    idx = bytes(fixture_values("png8", 3, w * h))
     w2, h2, rgb = decode_png(make_png_palette(w, h, idx, pal))
     assert (w2, h2) == (w, h)
     expect = np.frombuffer(pal, np.uint8).reshape(-1, 3)[
@@ -681,11 +751,11 @@ def test_png_palette_roundtrip_and_refusals(spark):
         decode_png(small)
 
     docs = spark.range(12).withColumnRenamed("id", "doc_id")
-    proj = {r.doc_id: r for r in decode_png_media(encode_png8_media(docs)).collect()}
+    proj = {r.doc_id: r for r in decode_codec(encode_codec(docs, "png8"), "png").collect()}
     for did in (0, 5, 11):
         w, h = png_dims(did)
         assert proj[did].pixel_sum == sum(
-            255 + (7 * i) % 256 for i in _png8_indices(did, w * h)
+            255 + (7 * i) % 256 for i in fixture_values("png8", did, w * h)
         )
 
 
@@ -769,23 +839,23 @@ def test_gif_decode_media_projection(spark):
     channel: palette-indexed), and the Spark projection kernel agrees
     with an in-process decode of the portable fixture."""
     from machine_learning_algorithm_sparkml__spark.operators.multimodal import (
-        _gif_indices,
-        decode_gif_media,
-        encode_gif_media,
+        decode_codec,
+        encode_codec,
+        fixture_values,
         gif_dims,
     )
 
     docs = spark.range(20).withColumnRenamed("id", "doc_id")
-    encoded = encode_gif_media(docs)
+    encoded = encode_codec(docs, "gif")
     rows = decode_media(encoded).collect()
     assert len(rows) == 20
     for r in rows:
         assert (r.width, r.height) == gif_dims(r.doc_id)
         assert r.n_channels == 1
-    proj = {r.doc_id: r for r in decode_gif_media(encoded).collect()}
+    proj = {r.doc_id: r for r in decode_codec(encoded, "gif").collect()}
     for did in (0, 7, 13, 19):
         w, h = gif_dims(did)
-        assert proj[did].index_sum == sum(_gif_indices(did, w * h))
+        assert proj[did].index_sum == sum(fixture_values("gif", did, w * h))
 
 
 def test_jpeg_flat_block_exact_roundtrip():
@@ -797,15 +867,15 @@ def test_jpeg_flat_block_exact_roundtrip():
     import numpy as np
 
     from machine_learning_algorithm_sparkml__spark.operators.multimodal import (
-        _jpeg_block_values,
         decode_jpeg,
+        fixture_values,
         jpeg_dims,
         make_jpeg,
     )
 
     for did in range(60):
         w, h = jpeg_dims(did)
-        vals = _jpeg_block_values(did, (w // 8) * (h // 8))
+        vals = fixture_values("jpeg", did, (w // 8) * (h // 8))
         grid = np.array(vals, dtype=np.uint8).reshape(h // 8, w // 8)
         gray = np.kron(grid, np.ones((8, 8), dtype=np.uint8))
         rgb = np.repeat(gray[..., None], 3, axis=-1)
@@ -964,15 +1034,15 @@ def test_jpeg_progressive_flat_fixture_and_refusals():
     import pytest
 
     from machine_learning_algorithm_sparkml__spark.operators.multimodal import (
-        _jpeg_prog_block_values,
         decode_jpeg,
+        fixture_values,
         jpeg_prog_dims,
         make_jpeg_progressive,
     )
 
     for did in (0, 1, 5, 11):
         w, h = jpeg_prog_dims(did)
-        vals = _jpeg_prog_block_values(did, (w // 8) * (h // 8))
+        vals = fixture_values("jpegprog", did, (w // 8) * (h // 8))
         grid = np.array(vals, dtype=np.uint8).reshape(h // 8, w // 8)
         gray = np.kron(grid, np.ones((8, 8), dtype=np.uint8))
         rgb = np.repeat(gray[..., None], 3, axis=-1)
@@ -1001,8 +1071,8 @@ def test_jpeg_dri_restart_markers_exact_and_sequenced():
     import pytest
 
     from machine_learning_algorithm_sparkml__spark.operators.multimodal import (
-        _jpeg_dri_block_values,
         decode_jpeg,
+        fixture_values,
         jpeg_dri_dims,
         jpeg_dri_interval,
         make_jpeg,
@@ -1011,7 +1081,7 @@ def test_jpeg_dri_restart_markers_exact_and_sequenced():
     # doc 44: 32x40 = 20 MCUs at interval 1 -> 19 RSTs, counter wraps twice
     for did in (0, 1, 2, 3, 7, 44):
         w, h = jpeg_dri_dims(did)
-        vals = _jpeg_dri_block_values(did, (w // 8) * (h // 8))
+        vals = fixture_values("jpegdri", did, (w // 8) * (h // 8))
         grid = np.array(vals, dtype=np.uint8).reshape(h // 8, w // 8)
         gray = np.kron(grid, np.ones((8, 8), dtype=np.uint8))
         rgb = np.repeat(gray[..., None], 3, axis=-1)
@@ -1023,7 +1093,7 @@ def test_jpeg_dri_restart_markers_exact_and_sequenced():
         assert np.array_equal(out.reshape(h, w, 3), rgb)
     # marker census on the wrap case: 19 restarts, m cycling 0..7
     w, h = jpeg_dri_dims(44)
-    vals = _jpeg_dri_block_values(44, (w // 8) * (h // 8))
+    vals = fixture_values("jpegdri", 44, (w // 8) * (h // 8))
     gray = np.kron(
         np.array(vals, dtype=np.uint8).reshape(h // 8, w // 8),
         np.ones((8, 8), dtype=np.uint8),
@@ -1065,15 +1135,15 @@ def test_jpeg420_flat_macroblock_exact_and_lossy_bounds():
     import numpy as np
 
     from machine_learning_algorithm_sparkml__spark.operators.multimodal import (
-        _jpeg420_macroblock_values,
         decode_jpeg,
+        fixture_values,
         jpeg420_dims,
         make_jpeg,
     )
 
     for did in range(40):
         w, h = jpeg420_dims(did)
-        vals = _jpeg420_macroblock_values(did, (w // 16) * (h // 16))
+        vals = fixture_values("jpeg420", did, (w // 16) * (h // 16))
         grid = np.array(vals, dtype=np.uint8).reshape(h // 16, w // 16)
         gray = np.kron(grid, np.ones((16, 16), dtype=np.uint8))
         rgb = np.repeat(gray[..., None], 3, axis=-1)
@@ -1125,23 +1195,23 @@ def test_jpeg_decode_media_projection(spark):
     Spark projection kernel agrees with the per-block fixture sum
     (64 pixels x 3 channels x block value)."""
     from machine_learning_algorithm_sparkml__spark.operators.multimodal import (
-        _jpeg_block_values,
-        decode_jpeg_media,
-        encode_jpeg_media,
+        decode_codec,
+        encode_codec,
+        fixture_values,
         jpeg_dims,
     )
 
     docs = spark.range(20).withColumnRenamed("id", "doc_id")
-    encoded = encode_jpeg_media(docs)
+    encoded = encode_codec(docs, "jpeg")
     rows = decode_media(encoded).collect()
     assert len(rows) == 20
     for r in rows:
         assert (r.width, r.height) == jpeg_dims(r.doc_id)
         assert r.n_channels == 3
-    proj = {r.doc_id: r for r in decode_jpeg_media(encoded).collect()}
+    proj = {r.doc_id: r for r in decode_codec(encoded, "jpeg").collect()}
     for did in (0, 7, 13, 19):
         w, h = jpeg_dims(did)
-        vals = _jpeg_block_values(did, (w // 8) * (h // 8))
+        vals = fixture_values("jpeg", did, (w // 8) * (h // 8))
         assert proj[did].pixel_sum == 192 * sum(vals)
 
 
@@ -2490,8 +2560,8 @@ def test_dhash_image_neardup(spark):
         image_dhash,
     )
     from machine_learning_algorithm_sparkml__spark.operators.multimodal import (
-        _png_pixel_bytes,
-        encode_png_twin_media,
+        encode_codec,
+        fixture_values,
         png_dims,
     )
 
@@ -2510,7 +2580,7 @@ def test_dhash_image_neardup(spark):
     # planted twin edit moves at most 3 bits, whatever the doc
     for did in (0, 37, 74, 296):
         w, hh = png_dims(did)
-        px = _png_pixel_bytes(did, w * hh * 3)
+        px = bytes(fixture_values("png", did, w * hh * 3))
         tw = bytearray(px)
         tw[0] = (tw[0] + 48) % 256
         a = dhash64(np.frombuffer(px, np.uint8).reshape(hh, w * 3), w, hh)
@@ -2521,7 +2591,7 @@ def test_dhash_image_neardup(spark):
     twins = docs.filter(F.col("doc_id") % 37 == 0).select(
         (F.col("doc_id") + 40_000_000).alias("doc_id")
     )
-    hashes = image_dhash(encode_png_twin_media(docs.unionAll(twins)))
+    hashes = image_dhash(encode_codec(docs.unionAll(twins), "png_twin"))
     got = sorted(
         (r.id_a, r.id_b, r.hamming)
         for r in dhash_near_dup_pairs(hashes).collect()

@@ -677,7 +677,7 @@ def test_scan_warc_media_dispatches_by_mime(spark, sf_dir):
     JPEG parser and passes text records through — one kernel, one pass
     over the archive; both branches verified against the fixture."""
     from machine_learning_algorithm_sparkml__spark.operators.multimodal import (
-        _jpeg_block_values,
+        fixture_values,
         jpeg_dims,
     )
     from machine_learning_algorithm_sparkml__spark.workload.scale import (
@@ -696,7 +696,7 @@ def test_scan_warc_media_dispatches_by_mime(spark, sf_dir):
             w, h = jpeg_dims(did)
             assert (r["mime"], r["width"], r["height"]) == ("image/jpeg", w, h)
             assert r["pixel_sum"] == 192 * sum(
-                _jpeg_block_values(did, (w // 8) * (h // 8))
+                fixture_values("jpeg", did, (w // 8) * (h // 8))
             )
             assert r["text"] is None
         else:

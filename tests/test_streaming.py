@@ -446,6 +446,41 @@ def test_python_stream_source_offset_recovery_exactly_once(spark, sf_dir):
     assert positions == sorted(positions) and positions[-1] == 7500, positions
 
 
+def test_python_source_drain_ignores_progress_retention(spark, sf_dir, monkeypatch):
+    """The incarnation loop stops at the incarnation that drains the
+    feed, read from the checkpointed {"pos"} cursor, however few
+    progress updates the query retains. This source runs one
+    micro-batch per availableNow incarnation, and a retention of 1
+    keeps none: a drain rule that sums ``recentProgress`` then never
+    fires and every remaining incarnation runs — the same under-count
+    as an incarnation that outruns the default 100-entry window."""
+    from pyspark.sql.streaming import DataStreamWriter
+
+    from machine_learning_algorithm_sparkml__spark.streaming import (
+        run_streaming_python_source,
+    )
+
+    starts = []
+    start = DataStreamWriter.start
+
+    def counting_start(self, *args, **kwargs):
+        starts.append(1)
+        return start(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataStreamWriter, "start", counting_start)
+    key = "spark.sql.streaming.numRecentProgressUpdates"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        out = run_streaming_python_source(
+            spark, sf_dir, rows_per_batch=2, max_rows=4, rows_per_partition=2
+        )
+    finally:
+        spark.conf.set(key, old)
+    assert sorted(r.id for r in out.collect()) == [0, 1, 2, 3]
+    assert len(starts) == 2  # one resume from the recovered cursor, no idle runs
+
+
 def test_python_source_static_join_exactly_once_across_incarnations(spark, sf_dir):
     """The stateless composition plane: multiple availableNow
     incarnations over one checkpoint must land every enriched feed row
